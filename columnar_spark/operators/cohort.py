@@ -36,10 +36,16 @@ Batch append algebra (exact, proven by test_cohort_sidecar fuzz):
                    +1 for each old AND new pair at m       (correction)
   user_min gets the batch mins appended (MIN-merge keeps the lower).
 
-Scale posture: per batch one anti-join against pairs (bucketable on
-user at real scale), one merge of user_min (O(users) — dim-sized), and
-correction reads touch only the MOVED users' pairs. The query itself
-never joins and never sees the event log. Reference analog: E6/E7's
+Scale posture: a driver-local batch (ingest.append_batch's small-batch
+regime) of at most DRIVER_FOLD_ROWS rows folds on the DRIVER: one
+filtered read of the batch users' `pairs/` and `user_min/` rows (either
+slice past the same bound falls back), the algebra below in Python, and
+three direct appends — no staging dirs, no counts, a few Spark jobs per
+batch whatever the sidecar's size. Other batches run the executor plan: one
+anti-join against pairs (bucketable on user at real scale), one merge
+of user_min (O(users) — dim-sized), and correction reads touch only
+the MOVED users' pairs. The query itself never joins and never sees
+the event log. Reference analog: E6/E7's
 answer-from-the-index COUNT regime (secondary/secondary.cpp:531-551)
 for the one shape the associative rollup (streaming/rollup.py) cannot
 express."""
@@ -53,6 +59,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_spark.localrel import local_row_count
+
 US_PER_DAY = 86_400_000_000
 
 COHORT_SUFFIX = ".cohort"
@@ -63,6 +71,13 @@ COHORT_SUFFIX = ".cohort"
 # about (economy cutoff — correctness never depends on it, and since
 # the r10 staging rework nothing is collected to the driver either way).
 REBUILD_CUTOFF = 2_000_000
+
+# Driver-fold bound (module docstring, Scale posture): the batch's rows
+# and each of the batch users' pairs/ and user_min/ slices. The driver
+# fold cost about half the executor plan's CPU at every batch size
+# measured, 1k to 75k events into a 100k-event sidecar; past 75k it is
+# unmeasured.
+DRIVER_FOLD_ROWS = 75_000
 
 
 def cohort_sidecar_path(table_path: str) -> str:
@@ -166,6 +181,117 @@ def _append_component(
         df.write.mode("append").parquet(target)
 
 
+def _fold_on_driver(
+    spark: SparkSession,
+    table_path: str,
+    root: str,
+    bp: DataFrame,
+    pairs_cur: DataFrame,
+    um_cur: DataFrame,
+) -> bool:
+    """The batch-scoped fold (module docstring, Scale posture): the
+    correction algebra in Python over the batch's (user, day) pairs `bp`
+    and the batch users' slices of the sidecar. Returns False, having
+    written nothing, when the batch is not driver-local or it or either
+    slice exceeds DRIVER_FOLD_ROWS."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    bound = DRIVER_FOLD_ROWS
+    n_local = local_row_count(bp)
+    if n_local is None or n_local > bound:
+        return False
+    # a driver-local batch projects its pairs with no Spark job
+    batch_pairs = set(map(tuple, bp.collect()))
+    uid = bp.schema["user_id"]
+    uid_arrow = to_arrow_type(uid.dataType)
+    users = spark.createDataFrame(
+        pa.table({"user_id": pa.array(sorted({u for u, _ in batch_pairs}), uid_arrow)}),
+        schema=StructType([uid]),
+    )
+    # the batch users' rows of pairs/ and user_min/: one filtered read,
+    # one broadcast of the user set, each slice bounded separately
+    none = F.lit(None).cast("long")
+    slices = (
+        pairs_cur.select("user_id", "day", none.alias("day0"), F.lit(True).alias("is_pair"))
+        .unionByName(
+            um_cur.select("user_id", none.alias("day"), "day0", F.lit(False).alias("is_pair"))
+        )
+        .join(F.broadcast(users), "user_id", "left_semi")
+        .limit(2 * bound + 1)
+        .toArrow()
+    )
+    rows = list(zip(*(slices[c].to_pylist() for c in ("user_id", "day", "day0", "is_pair"))))
+    n_pairs = sum(r[3] for r in rows)
+    if max(n_pairs, len(rows) - n_pairs) > bound:
+        return False
+
+    seen: dict = {}
+    day0: dict = {}  # MIN-merge of the user_min partials (NULLs ignored)
+    for u, d, d0, is_pair in rows:
+        if is_pair:
+            seen.setdefault(u, set()).add(d)
+        else:
+            cur = day0.get(u)
+            day0[u] = d0 if cur is None else cur if d0 is None else min(cur, d0)
+    new_days: dict = {}  # anti-join: only pairs not already in `pairs`
+    for u, d in sorted(batch_pairs, key=lambda p: (p[0], p[1] is None, p[1] or 0)):
+        if d not in seen.get(u, ()):
+            new_days.setdefault(u, []).append(d)
+    if not new_days:
+        _write_sig(table_path)
+        return True
+    delta: dict = {}
+
+    def add(cohort, day, n):
+        delta[(cohort, day)] = delta.get((cohort, day), 0) + n
+
+    bmin: dict = {}
+    for u, days in new_days.items():
+        known = [d for d in days if d is not None]
+        m = bmin[u] = min(known) if known else None
+        d0 = day0.get(u)
+        if d0 is not None and m is not None and m < d0:
+            # moved: retract the old cells, re-emit old + new at m
+            for d in seen.get(u, ()):
+                add(d0, d, -1)
+                add(m, d, 1)
+            for d in days:
+                add(m, d, 1)
+        else:
+            for d in days:
+                add(m if d0 is None else d0, d, 1)
+
+    def long_field(name):
+        return StructField(name, LongType(), True)
+
+    cells = [(c, d, n) for (c, d), n in delta.items() if n]
+    components = [
+        ("matrix", {
+            "cohort_day": pa.array([c for c, _, _ in cells], pa.int64()),
+            "day": pa.array([d for _, d, _ in cells], pa.int64()),
+            "cnt": pa.array([n for _, _, n in cells], pa.int64()),
+        }, [long_field("cohort_day"), long_field("day"), long_field("cnt")]),
+        ("pairs", {
+            "user_id": pa.array([u for u, ds in new_days.items() for _ in ds], uid_arrow),
+            "day": pa.array([d for ds in new_days.values() for d in ds], pa.int64()),
+        }, [uid, long_field("day")]),
+        ("user_min", {
+            "user_id": pa.array(list(bmin), uid_arrow),
+            "day0": pa.array(list(bmin.values()), pa.int64()),
+        }, [uid, long_field("day0")]),
+    ]
+    # matrix first: queries read only matrix/, and the slices above are
+    # driver-held, so the appends cannot feed back into this fold
+    for sub, cols, fields in components:
+        if len(next(iter(cols.values()))):
+            df = spark.createDataFrame(pa.table(cols), schema=StructType(fields))
+            _append_component(spark, df.coalesce(1), table_path, root, sub)
+    _write_sig(table_path)
+    return True
+
+
 def append_cohort_batch(
     spark: SparkSession,
     table_path: str,
@@ -175,7 +301,9 @@ def append_cohort_batch(
     """Fold one appended event batch in — the correction algebra from
     the module docstring. O(batch + moved-users' pairs) new rows; the
     anti-join and the user_min merge read the existing sidecar (the
-    merge_value_index maintenance posture, E9).
+    merge_value_index maintenance posture, E9). A driver-local batch
+    folds on the driver (_fold_on_driver); the rest of this docstring is
+    the executor plan for the others.
 
     Staging discipline (r10): every frame whose plan READS the sidecar
     (new_pairs, the correction delta) is materialized to a TEMP parquet
@@ -204,12 +332,12 @@ def append_cohort_batch(
             write_cohort_sidecar(spark, table_path, meta["ts_col"], meta["user_col"])
             return
     pairs_cur = objstore.read_df(spark, os.path.join(root, "pairs"))
-    um = (
-        objstore.read_df(spark, os.path.join(root, "user_min"))
-        .groupBy("user_id")
-        .agg(F.min("day0").alias("day0"))
-    )
-    bp = pairs_from_events(batch, meta["ts_col"], meta["user_col"]).distinct()
+    um_cur = objstore.read_df(spark, os.path.join(root, "user_min"))
+    bp = pairs_from_events(batch, meta["ts_col"], meta["user_col"])
+    if _fold_on_driver(spark, table_path, root, bp, pairs_cur, um_cur):
+        return
+    bp = bp.distinct()
+    um = um_cur.groupBy("user_id").agg(F.min("day0").alias("day0"))
     stage = tempfile.mkdtemp(prefix="cohort-stage-")
     try:
         bp.join(pairs_cur, ["user_id", "day"], "left_anti").write.parquet(

@@ -157,8 +157,6 @@ def _refresh_derived_sidecars(spark, path: str, fmt: str) -> None:
     import os
     import shutil
 
-    from pyspark.sql import functions as F
-
     from columnar_spark.stats import (
         build_stats_manifest,
         rewrites_disabled,
@@ -170,29 +168,9 @@ def _refresh_derived_sidecars(spark, path: str, fmt: str) -> None:
     with rewrites_disabled(spark):
         write_stats_sidecar(spark, build_stats_manifest(new), base)
 
-        rroot = base + ".rollup"
-        if os.path.isdir(rroot):
-            try:
-                with open(os.path.join(rroot, "meta.json")) as fh:
-                    meta = json.load(fh)
-                from columnar_spark.streaming.rollup import write_rollup_sidecar
+        from columnar_spark.streaming.rollup import rebuild_rollup_sidecars
 
-                df2 = new
-                if dict(df2.dtypes).get(meta["ts_col"]) in ("bigint", "long"):
-                    df2 = df2.withColumn(
-                        meta["ts_col"],
-                        F.timestamp_micros(F.expr(f"{meta['ts_col']} div 1000")),
-                    )
-                write_rollup_sidecar(
-                    df2,
-                    path,
-                    ts_col=meta["ts_col"],
-                    bucket=meta["bucket"],
-                    keys=meta["keys"],
-                    value_col=meta["value_col"],
-                )
-            except Exception:
-                shutil.rmtree(rroot, ignore_errors=True)
+        rebuild_rollup_sidecars(new, path)
 
         croot = base + ".cohort"
         if os.path.isdir(croot):

@@ -570,6 +570,15 @@ def table_signature(table_path: str) -> dict:
     return {"files": files, "bytes": total, "max_mtime_ms": newest}
 
 
+def footer_row_count(table_path: str) -> int:
+    """Rows of a POSIX parquet table summed from its file footers — what
+    `spark.read.parquet(table_path).count()` answers, with no Spark job
+    (pyarrow skips `_`/`.`-prefixed files as Spark's listing does)."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(table_path, format="parquet").count_rows()
+
+
 def _write_table_sig(table_path: str, index_dir: str) -> None:
     from columnar_spark import objstore
 
@@ -743,22 +752,33 @@ def merge_value_index(spark: SparkSession, table_path: str, col: str, batch_df: 
     measures = [
         (c, int(dp)) for c, dp in (value_index_measures(table_path, col) or [])
     ]
-    delta = build_value_index(batch_df, col, measures or None)
+    from columnar_spark.functions.money import scaled
+    from columnar_spark.localrel import local_relation
+
+    # the batch joins the union row by row (cnt 1): the one aggregate
+    # below groups it together with the sidecar, its partial aggregation
+    # pre-summing the batch per split as build_value_index would
+    delta = batch_df.select(
+        F.col(col).alias("value"),
+        F.lit(1).cast("long").alias("cnt"),
+        *[scaled(c, dp).cast("long").alias(measure_col_name(c)) for c, dp in measures],
+    )
     maggs = [F.sum("cnt").cast("long").alias("cnt")] + [
         F.sum(measure_col_name(c)).cast("long").alias(measure_col_name(c))
         for c, _dp in measures
     ]
     merged = existing.unionByName(delta).groupBy("value").agg(*maggs)
+    # collected once through Arrow (small by contract): the result is a
+    # LocalRelation, so the overwrite below never reads what it replaces
     with rewrites_disabled(spark):  # the batch count must NOT be served
-        rows = merged.collect()     # from the index being merged into
-    out = spark.createDataFrame(rows, merged.schema)
+        out = local_relation(spark, merged)  # from the index being merged into
     from columnar_spark import objstore
 
     _vp = value_index_path(table_path, col)
     if objstore.is_object_store(_vp):
         objstore.write_df(spark, out, _vp, mode="overwrite")
     else:
-        out.write.mode("overwrite").parquet(_vp)
+        out.coalesce(1).write.mode("overwrite").parquet(_vp)
     if jmeta is not None or cmeta is not None or measures:
         # overwrite clears the dir — restore meta
         import json
@@ -948,8 +968,9 @@ def merge_posting_index(
     )
     from columnar_spark import objstore
 
-    rows = merged.collect()  # same small-by-contract bound as the value index
-    out = spark.createDataFrame(rows, merged.schema)
+    from columnar_spark.localrel import local_relation
+
+    out = local_relation(spark, merged)  # small by contract, like the value index
     p = posting_index_path(table_path, col)
     if objstore.is_object_store(table_path):
         objstore.write_df(spark, out, p, mode="overwrite")

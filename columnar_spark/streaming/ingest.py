@@ -22,9 +22,30 @@ the one recovery that cannot double-count. The text-index and vocab
 sidecars keep their own applied-batch staging (stage-then-commit) and
 are consistent under either path.
 
-Scale posture: foreachBatch bodies are plain DataFrame jobs (no driver
-loops); state for windowed aggs is bounded by the watermark; the ledger
-is O(#batches) JSON metadata, no data-plane cost.
+Small-batch regime: a batch the caller already holds on the driver —
+an INSERT of VALUES or of a view over an Arrow table, a micro-batch
+built from one — has a LocalRelation plan (localrel.local_row_count
+answers its row count with no Spark job). It is evaluated once into a
+fresh LocalRelation, so the sidecar folds re-read its rows without
+re-running its projections; it lands as ceil(rows /
+writer.ROWS_PER_SPLIT) files instead of one per core; and a batch of at
+most cohort.DRIVER_FOLD_ROWS rows folds into the cohort sidecar on the
+driver. A batch with a distributed plan is never pulled to the driver
+to get there: on events, copying a parquet-read batch into a
+LocalRelation first made its INSERT no cheaper at 1k-10k rows and
+dearer at 30k-75k. The merges that collect a small result (stats
+sketch, value and posting indexes) go through Arrow, so no maintenance
+step starts a Python worker.
+
+Maintained beside the table: stats sketch + manifest, value / JSON-field
+/ composite / posting indexes, IVF-PQ and HNSW vector indexes,
+text-feature and near-dup companions, join and aggregate projections,
+the cohort matrix, the continuous-aggregate rollups, and the text index
+and vocab.
+
+Scale posture: distributed batches stay plain DataFrame jobs (no
+driver loops); state for windowed aggs is bounded by the watermark; the
+ledger is O(#batches) JSON metadata, no data-plane cost.
 """
 
 from __future__ import annotations
@@ -37,14 +58,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from columnar_spark.functions import money
-
+from columnar_spark.localrel import local_relation, local_row_count
 from columnar_spark.stats import (
     build_stats_sketch,
     manifest_from_sketch,
     merge_sketches,
     sketch_path,
 )
-from columnar_spark.writer import WriteSpec, normalize, stats_path
+from columnar_spark.writer import ROWS_PER_SPLIT, WriteSpec, normalize, stats_path
 
 
 def ingest_ledger_path(dst_path: str) -> str:
@@ -269,9 +290,7 @@ def _rebuild_sidecars(ss: SparkSession, dst_path: str) -> None:
     )
 
     full = ss.read.parquet(dst_path)
-    sk = build_stats_sketch(full)
-    rows = sk.collect()
-    sdf = ss.createDataFrame(rows, sk.schema)
+    sdf = local_relation(ss, build_stats_sketch(full))
     sdf.coalesce(1).write.mode("overwrite").parquet(sketch_path(dst_path))
     from columnar_spark.stats import write_stats_sidecar
 
@@ -355,6 +374,9 @@ def _rebuild_sidecars(ss: SparkSession, dst_path: str) -> None:
     cm = cohort_meta(dst_path)
     if cm is not None:
         write_cohort_sidecar(ss, dst_path, cm["ts_col"], cm["user_col"])
+    from columnar_spark.streaming.rollup import rebuild_rollup_sidecars
+
+    rebuild_rollup_sidecars(full, dst_path)
     from columnar_spark.operators.hnsw_index import (
         build_graph_index,
         graph_index_dirs,
@@ -392,11 +414,21 @@ def append_batch(
     """Append one batch to a table with full sidecar maintenance: the
     normalized rows land in the table, the stats sketch/manifest merge
     in the batch's contribution (O(batch), mergeable HLL + associative
-    min/max/counts), and — if the table carries a persisted IVF-PQ
-    index — the batch's codes append with the existing centroids/
-    codebooks (no retrain). One contract shared by batch CLI appends and
-    the streaming foreachBatch sink, mirroring the reference's
-    storage-plus-sidecars rebuild unit (secondary.cpp:391-434, E9).
+    min/max/counts), and every other sidecar the table carries folds the
+    batch in — value/JSON-field/posting indexes, vector indexes (codes
+    append with the existing centroids/codebooks, no retrain), text
+    companions, projections, the cohort matrix and every
+    `<table>.rollup[-<name>]` continuous aggregate. One contract shared
+    by batch CLI appends, Engine.sql INSERT and the streaming
+    foreachBatch sink, mirroring the reference's storage-plus-sidecars
+    rebuild unit (secondary.cpp:391-434, E9).
+
+    A driver-local batch (module docstring, small-batch regime) is
+    evaluated once into a fresh LocalRelation and written as
+    ceil(rows / writer.ROWS_PER_SPLIT) files. This is the one place that
+    regime is recognized: the folds only ask whether the batch they get
+    is driver-local (the cohort fold also bounds its size). Any other
+    batch keeps its distributed plan.
 
     With `batch_id` (the streaming epoch id) the ENTIRE application is
     replay-safe through the per-table ledger (module docstring); returns
@@ -450,10 +482,20 @@ def append_batch(
         except Exception:
             pre_sig = None
 
+        # small-batch regime (module docstring): a driver-local batch is
+        # evaluated once — its projections (INSERT casts, JSON fields)
+        # collapse into a fresh LocalRelation instead of being re-run by
+        # every fold's plan — and lands as ceil(rows / ROWS_PER_SPLIT)
+        # files, not one per core
+        n_local = local_row_count(out)
+        written = out
+        if n_local is not None:
+            out = local_relation(ss, out)
+            written = out.coalesce(max(1, -(-n_local // ROWS_PER_SPLIT)))
         if batch_id is None:
-            out.write.mode("append").option("compression", spec.compression).parquet(
-                dst_path
-            )
+            written.write.mode("append").option(
+                "compression", spec.compression
+            ).parquet(dst_path)
             appended = out
         else:
             # Idempotent table append (idempotent_append): stage the batch,
@@ -461,7 +503,7 @@ def append_batch(
             # batch-derived names — the rows land exactly once no matter how
             # many times the sink is re-invoked.
             moved = idempotent_append(
-                out,
+                written,
                 dst_path,
                 batch_id,
                 compression=spec.compression,
@@ -470,8 +512,13 @@ def append_batch(
             )
             # sidecars merge from the COMMITTED rows, not a re-evaluation of
             # the batch plan (same principle as the text index counting its
-            # written delta)
-            appended = ss.read.parquet(*moved) if moved else None
+            # written delta) — for a local batch, the very rows written
+            if not moved:
+                appended = None
+            elif n_local is not None:
+                appended = out
+            else:
+                appended = ss.read.parquet(*moved)
 
         if crashed:
             _rebuild_sidecars(ss, dst_path)
@@ -486,8 +533,7 @@ def append_batch(
                 # O(batch)). For a brand-new table this reads exactly the batch.
                 merged = build_stats_sketch(ss.read.parquet(dst_path))
             # materialize before overwriting the path the plan reads from
-            rows = merged.collect()  # n_columns tiny rows
-            merged_df = ss.createDataFrame(rows, merged.schema)
+            merged_df = local_relation(ss, merged)  # n_columns tiny rows
             merged_df.coalesce(1).write.mode("overwrite").parquet(sp)
             from columnar_spark.stats import write_stats_sidecar
 
@@ -646,6 +692,11 @@ def append_batch(
 
             if cohort_meta(dst_path) is not None:
                 append_cohort_batch(ss, dst_path, appended, pre_sig=pre_sig)
+            # Continuous-aggregate rollups (<table>.rollup[-<name>]): the
+            # batch's partials append, so the rollup router keeps serving.
+            from columnar_spark.streaming.rollup import append_rollup_sidecars
+
+            append_rollup_sidecars(appended, dst_path, batch_id=batch_id)
 
         # Inverted-text + vocab sidecars: their own applied-batch staging
         # makes these calls retry-exact under BOTH the incremental and the

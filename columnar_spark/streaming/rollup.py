@@ -44,6 +44,7 @@ from columnar_spark.functions import money
 
 # sum_v scale: partials store SUM(FLOOR(value*100+0.5)) as int64.
 SUM_SCALE = 2
+SUM_ENCODING = f"int64_scaled_1e{SUM_SCALE}"
 
 
 def unscale_sum_v(df: DataFrame, col: str = "sum_v") -> Column:
@@ -271,7 +272,7 @@ def write_rollup_sidecar(
             "bucket": bucket,
             "keys": list(keys),
             "value_col": value_col,
-            "sum_encoding": f"int64_scaled_1e{SUM_SCALE}",
+            "sum_encoding": SUM_ENCODING,
         },
     )
     # Record the base table's content signature (the _aggp-style gate):
@@ -283,6 +284,85 @@ def write_rollup_sidecar(
 
     _write_table_sig(table_path, root)
     return root
+
+
+def rollup_sidecars(table_path: str) -> "list[tuple[str | None, dict]]":
+    """(name, meta) of every rollup registered beside a POSIX table:
+    the default `<table>.rollup` (name None) and each named
+    `<table>.rollup-<name>`."""
+    import os
+    import re
+
+    from columnar_spark import objstore
+
+    base = table_path.rstrip("/")
+    parent, stem = os.path.split(base)
+    out = []
+    if not os.path.isdir(parent or "."):  # an object-store table
+        return out
+    for entry in sorted(os.listdir(parent or ".")):
+        m = re.fullmatch(re.escape(stem) + r"\.rollup(?:-([A-Za-z0-9_\-]+))?", entry)
+        if m is None:
+            continue
+        meta = objstore.read_json(os.path.join(parent, entry), "meta.json")
+        if meta is not None:
+            out.append((m.group(1), meta))
+    return out
+
+
+def ts_as_timestamp(df: DataFrame, ts_col: str) -> DataFrame:
+    """bigint-nanos `ts` vintages bucket as timestamps: the rollup
+    sidecars are built (writer.build_sf_layout) and folded over this."""
+    if dict(df.dtypes).get(ts_col) in ("bigint", "long"):
+        return df.withColumn(ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000")))
+    return df
+
+
+def _rebuild_rollup(table: DataFrame, table_path: str, name, meta: dict) -> None:
+    write_rollup_sidecar(
+        ts_as_timestamp(table, meta["ts_col"]),
+        table_path, meta["ts_col"], meta["bucket"], meta["keys"],
+        meta["value_col"], name=name,
+    )
+
+
+def append_rollup_sidecars(
+    batch_df: DataFrame, table_path: str, batch_id: int | None = None
+) -> None:
+    """Fold one appended batch into every rollup sidecar of the table
+    (append_batch's maintenance step; run AFTER the table append, so the
+    re-recorded signature matches). Each sidecar's meta.json names what
+    it aggregates. A sidecar with a legacy sum encoding is rebuilt from
+    the table instead — its partials cannot take int64 rows."""
+    import os
+
+    spark = batch_df.sparkSession
+    for name, meta in rollup_sidecars(table_path):
+        if meta["ts_col"] not in batch_df.columns:
+            continue
+        if meta.get("sum_encoding") != SUM_ENCODING:
+            _rebuild_rollup(spark.read.parquet(table_path), table_path, name, meta)
+            continue
+        append_rollup_batch(
+            ts_as_timestamp(batch_df, meta["ts_col"]),
+            os.path.join(rollup_sidecar_path(table_path, name), "partials"),
+            meta["ts_col"], meta["bucket"], meta["keys"], meta["value_col"],
+            batch_id=batch_id,
+        )
+
+
+def rebuild_rollup_sidecars(table: DataFrame, table_path: str) -> None:
+    """Rebuild every rollup sidecar from `table`, the current contents
+    of `table_path` (DML refresh, ingest crash recovery). One that fails
+    to rebuild is removed (disable-on-update), so none serves stale
+    partials."""
+    import shutil
+
+    for name, meta in rollup_sidecars(table_path):
+        try:
+            _rebuild_rollup(table, table_path, name, meta)
+        except Exception:
+            shutil.rmtree(rollup_sidecar_path(table_path, name), ignore_errors=True)
 
 
 def load_rollup_sidecar(spark: SparkSession, table_path: str, name: str | None = None):

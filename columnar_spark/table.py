@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from columnar_spark.catalog import load_table, table_path
 from columnar_spark.filters import Filter, apply_filters, compile_filters
+from columnar_spark.localrel import local_relation
 from columnar_spark.operators.knn import knn_topk, knn_topk_ivf, train_centroids
 from columnar_spark.plans.explain import AccessPathReport, access_path_report
 from columnar_spark.session import tune
@@ -34,24 +35,6 @@ from columnar_spark.stats import (
     estimate_selectivity,
     stats_can_match,
 )
-
-
-def _local_relation(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Driver-local copy of a small DataFrame as a JVM LocalTableScan.
-
-    `createDataFrame(df.collect())` builds a Python-pickled ExistingRDD
-    that re-crosses the JVM->Python boundary on EVERY execution of every
-    plan that embeds it (~0.3s/exec fixed cost, measured at sf0.1); the
-    Arrow round-trip (DataFrame.toArrow -> createDataFrame(pa.Table))
-    yields a LocalRelation evaluated entirely JVM-side, type-exact for
-    every Spark SQL type Arrow can carry (bigint/NULLs/decimal/date
-    round-trip pinned in tests). Falls back to the row path when Arrow
-    cannot represent the schema."""
-    try:
-        out = spark.createDataFrame(df.toArrow(), schema=df.schema)
-    except Exception:
-        out = spark.createDataFrame(df.collect(), df.schema)
-    return out
 
 
 class Engine:
@@ -620,10 +603,13 @@ class Engine:
     def _invalidate_table_caches(self, name: str) -> None:
         """Drop cached frames after DML rewrote the table directory —
         a cached DataFrame may pin the pre-swap file listing, and
-        adopted value indexes were rebuilt (or invalidated) on disk.
-        A registered temp view pins the old listing the same way, so
-        re-register it from the fresh directory."""
+        adopted value indexes were rebuilt (or invalidated) on disk,
+        and the cached stats manifest counts the old rows (the rollup
+        route's freshness gate compares against it). A registered temp
+        view pins the old listing the same way, so re-register it from
+        the fresh directory."""
         self._tables.pop(name, None)
+        self._manifests.pop(name, None)
         for key in [k for k in self._value_indexes if k[0] == name]:
             self._value_indexes.pop(key, None)
         if name in self._views:
@@ -663,7 +649,7 @@ class Engine:
         scan)."""
         idx = build_value_index(self.table(name), col)
         if idx.count() <= max_local_rows:
-            idx = _local_relation(self.spark, idx)
+            idx = local_relation(self.spark, idx)
         else:
             idx = idx.cache()
         self._value_indexes[(name, col)] = idx
@@ -684,7 +670,7 @@ class Engine:
         df = self.table(name).withColumn(vname, json_field_expr(parent, json_path))
         idx = build_value_index(df, vname)
         if idx.count() <= max_local_rows:
-            idx = _local_relation(self.spark, idx)
+            idx = local_relation(self.spark, idx)
         else:
             idx = idx.cache()
         self._value_indexes[(name, vname)] = idx
@@ -725,9 +711,11 @@ class Engine:
 
     def count(self, name: str, filters: Sequence[Filter] = ()) -> int:
         """COUNT(*) with filters; answered from a value index alone when a
-        single-column filter is covered (CalcCount parity, E6)."""
+        single-column filter is covered (CalcCount parity, E6). The index
+        is looked up like Engine.sql's: in-session, else the fresh on-disk
+        sidecar (re-adopted after DML dropped the session copy)."""
         if len(filters) == 1:
-            idx = self._value_indexes.get((name, filters[0].name))
+            idx = self._get_value_index(name, filters[0].name)
             if idx is not None:
                 n = covered_count(idx, filters[0])
                 if n is not None:
@@ -1238,9 +1226,12 @@ class Engine:
         if m:
             from pyspark.sql import functions as _F
 
+            from columnar_spark.localrel import local_rows
+            from columnar_spark.stats import footer_row_count
             from columnar_spark.streaming.ingest import append_batch
 
             name, body = m.group(1), m.group(2)
+            path = f"{self.sf_dir}/{name}.parquet"
             target = self.table(name)
             batch = self.spark.sql(body)
             if len(batch.columns) != len(target.columns):
@@ -1254,11 +1245,23 @@ class Engine:
                     for b, t in zip(batch.columns, target.columns)
                 ]
             )
-            n_ins = batch.count()
-            append_batch(batch, f"{self.sf_dir}/{name}.parquet")
+
+            def n_rows():
+                # parquet footers on POSIX: no Spark job
+                if "://" in path:
+                    return self.spark.read.parquet(path).count()
+                return footer_row_count(path)
+
+            # append_batch evaluates the batch once (a small one into a
+            # driver-local relation); n_affected is the row-count delta
+            # of the table, so the batch is never counted on its own
+            n_before = n_rows()
+            append_batch(batch, path)
             self._invalidate_table_caches(name)
-            return self.spark.createDataFrame(
-                [("insert", name, n_ins, self.table(name).count())],
+            n_after = n_rows()
+            return local_rows(
+                self.spark,
+                [("insert", name, n_after - n_before, n_after)],
                 "op: string, table: string, n_affected: bigint, n_rows: bigint",
             )
 

@@ -696,13 +696,12 @@ def build_sf_layout(
             # BYs route onto O(buckets x keys) partials instead of a
             # table scan (Engine.sql MV routing + the time_bucket query
             # family). Streaming ingest appends into the same partials.
-            from columnar_spark.streaming.rollup import write_rollup_sidecar
+            from columnar_spark.streaming.rollup import (
+                ts_as_timestamp,
+                write_rollup_sidecar,
+            )
 
-            ev = spark.read.parquet(dest)
-            if dict(ev.dtypes).get("ts") in ("bigint", "long"):
-                from pyspark.sql import functions as _F
-
-                ev = ev.withColumn("ts", _F.timestamp_micros(_F.expr("ts div 1000")))
+            ev = ts_as_timestamp(spark.read.parquet(dest), "ts")
             write_rollup_sidecar(ev, dest)
             # Named user-day rollup: the distinct (user, day) activity
             # pairs — retention/cohort queries read |user x day| partial

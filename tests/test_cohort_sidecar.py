@@ -41,6 +41,31 @@ def events_table(spark, tmp_path):
     return ev, p
 
 
+@pytest.fixture(params=["driver", "executor"])
+def fold_path(request, spark, monkeypatch):
+    """Run an append test over BOTH fold paths. Yields how to hand a
+    batch to append_cohort_batch: as a driver-local relation (what
+    append_batch passes for a small batch — the driver fold) or as the
+    distributed plan (the executor plan). Asserts the path each append
+    took."""
+    from columnar_spark.localrel import local_relation
+    from columnar_spark.operators import cohort
+
+    taken = []
+    real = cohort._fold_on_driver
+
+    def spy(*args):
+        taken.append(real(*args))
+        return taken[-1]
+
+    monkeypatch.setattr(cohort, "_fold_on_driver", spy)
+    if request.param == "driver":
+        yield lambda b: local_relation(spark, b)
+    else:
+        yield lambda b: b
+    assert taken and all(t == (request.param == "driver") for t in taken)
+
+
 def test_build_load_and_check(spark, events_table):
     ev, p = events_table
     ev.write.parquet(p)
@@ -51,7 +76,7 @@ def test_build_load_and_check(spark, events_table):
     assert check_cohort_sidecar(spark, p) == []
 
 
-def test_append_with_cohort_moves_stays_exact(spark, events_table):
+def test_append_with_cohort_moves_stays_exact(spark, events_table, fold_path):
     """Adversarial split: the FIRST batch holds the LATE half of every
     user's history, so later batches move most users' cohorts earlier —
     maximal correction traffic."""
@@ -65,14 +90,14 @@ def test_append_with_cohort_moves_stays_exact(spark, events_table):
     write_cohort_sidecar(spark, p)
     for b in batches:
         b.write.mode("append").parquet(p)
-        append_cohort_batch(spark, p, b)
+        append_cohort_batch(spark, p, fold_path(b))
         got = load_cohort_matrix(spark, p)
         assert got is not None, "sidecar went stale after its own append"
         assert _matrix_rows(got) == _matrix_rows(_live(spark, p))
     assert check_cohort_sidecar(spark, p) == []
 
 
-def test_append_fuzz_random_splits(spark, events_table):
+def test_append_fuzz_random_splits(spark, events_table, fold_path):
     ev, p = events_table
     rng = random.Random(11)
     n_parts = 4
@@ -82,12 +107,12 @@ def test_append_fuzz_random_splits(spark, events_table):
     write_cohort_sidecar(spark, p)
     for b in parts[1:]:
         b.write.mode("append").parquet(p)
-        append_cohort_batch(spark, p, b)
+        append_cohort_batch(spark, p, fold_path(b))
     got = load_cohort_matrix(spark, p)
     assert _matrix_rows(got) == _matrix_rows(_live(spark, p))
     # duplicate replay of the last batch's PAIRS is absorbed by the
     # anti-join (all pairs already present -> no-op)
-    append_cohort_batch(spark, p, parts[-1])
+    append_cohort_batch(spark, p, fold_path(parts[-1]))
     got2 = load_cohort_matrix(spark, p)
     assert _matrix_rows(got2) == _matrix_rows(_live(spark, p))
 

@@ -154,3 +154,135 @@ def test_update_type_preserved(spark, tmp_path, eng):
     eng.sql("UPDATE t SET v = v / 2 WHERE id = 2")  # div yields double; cast back
     dt = dict(spark.read.parquet(str(tmp_path / "t.parquet")).dtypes)["v"]
     assert dt == "int"
+
+
+# ---------------------------------------------------------------- INSERT
+# maintenance on the ingest layout of an events table: value index,
+# materialized JSON field + its index, day/event_type and user-day
+# rollups, cohort sidecar (writer.build_sf_layout).
+
+_ROLLUP_Q = (
+    "SELECT date_trunc('day', ts) AS b, event_type, COUNT(*) AS n "
+    "FROM events GROUP BY b, event_type"
+)
+
+
+def _events_rows(lo, hi):
+    import datetime
+
+    t0 = datetime.datetime(2024, 1, 1)
+    types = ["view", "click", "buy", "signup"]
+    return [
+        {
+            "event_id": i,
+            "ts": t0 + datetime.timedelta(hours=7 * i),
+            "user_id": (i * 37) % 53,
+            "event_type": types[i % 4],
+            "value": round((i % 97) * 1.25, 2),
+            "props": '{"k": %d}' % (i % 5),
+        }
+        for i in range(lo, hi)
+    ]
+
+
+@pytest.fixture()
+def events_eng(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from columnar_spark.writer import build_sf_layout
+
+    src, dest = tmp_path / "src", tmp_path / "layout"
+    src.mkdir()
+    pq.write_table(pa.Table.from_pylist(_events_rows(0, 300)), str(src / "events.parquet"))
+    build_sf_layout(spark, str(src), str(dest))
+    return Engine(spark, str(dest))
+
+
+def _insert_events(spark, eng, lo, hi):
+    """INSERT INTO events from a temp view, binding every table column
+    (the materialized JSON field is computed from props)."""
+    import pyarrow as pa
+
+    spark.createDataFrame(pa.Table.from_pylist(_events_rows(lo, hi))).createOrReplaceTempView(
+        "ins_batch"
+    )
+    cols = [
+        "get_json_object(props, '$.k') AS props__j_k" if c == "props__j_k" else c
+        for c in eng.table("events").columns
+    ]
+    return eng.sql(f"INSERT INTO events SELECT {', '.join(cols)} FROM ins_batch").first()
+
+
+def _live_rollup(spark, eng):
+    ev = spark.read.parquet(f"{eng.sf_dir}/events.parquet")
+    return sorted(
+        tuple(r)
+        for r in ev.groupBy(F.date_trunc("day", "ts").alias("b"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+
+
+def test_insert_keeps_rollup_route_fresh(spark, events_eng):
+    """After INSERT the rollup-routed day/event_type GROUP BY still reads
+    the rollup sidecar and equals the live plan (the batch folded into
+    every rollup, and the row-count gate sees the new count)."""
+    assert sorted(tuple(r) for r in events_eng.sql(_ROLLUP_Q).collect()) == _live_rollup(
+        spark, events_eng
+    )
+    res = _insert_events(spark, events_eng, 300, 340)
+    assert (res["n_affected"], res["n_rows"]) == (40, 340)
+    routed = events_eng.sql(_ROLLUP_Q)
+    files = routed.inputFiles()
+    assert files and all(".rollup/" in f for f in files)
+    assert sorted(tuple(r) for r in routed.collect()) == _live_rollup(spark, events_eng)
+
+
+def test_count_reads_value_index_after_insert(spark, events_eng, monkeypatch):
+    """Engine.count re-adopts the merged persisted sidecar after INSERT
+    dropped the session copy, instead of scanning the table."""
+    from columnar_spark import table as table_mod
+    from columnar_spark.filters import Filter, FilterType
+    from columnar_spark.stats import covered_count
+
+    served = []
+
+    def spy(idx, f):
+        served.append(covered_count(idx, f))
+        return served[-1]
+
+    events_eng.load_persisted_value_indexes("events")
+    _insert_events(spark, events_eng, 300, 340)
+    monkeypatch.setattr(table_mod, "covered_count", spy)
+    n = events_eng.count("events", [Filter("event_type", FilterType.STRINGS, strings=["buy"])])
+    assert served and served[-1] == n
+    assert n == spark.read.parquet(f"{events_eng.sf_dir}/events.parquet").where(
+        "event_type = 'buy'"
+    ).count()
+
+
+def test_small_insert_job_budget_and_one_file(spark, events_eng):
+    """A small INSERT maintaining every sidecar runs a fixed, small
+    number of Spark jobs (the same on every append) and lands as one
+    file."""
+    path = f"{events_eng.sf_dir}/events.parquet"
+
+    def files():
+        return len([f for f in os.listdir(path) if f.endswith(".parquet")])
+
+    sc = spark.sparkContext
+    _insert_events(spark, events_eng, 300, 320)  # first append bootstraps the stats sketch
+    jobs = []
+    for i, lo in enumerate((320, 340)):
+        before = files()
+        group = f"insert-budget-{i}"
+        sc.setJobGroup(group, "INSERT job budget", False)
+        try:
+            res = _insert_events(spark, events_eng, lo, lo + 20)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        assert res["n_affected"] == 20
+        assert files() == before + 1
+    assert jobs[0] == jobs[1] <= 30, jobs

@@ -200,7 +200,7 @@ def test_stream_ingest_maintains_json_field_index(spark, tmp_path):
 
 
 def test_local_relation_is_jvm_local_and_type_exact(spark):
-    """_local_relation must produce a JVM LocalTableScan (no per-execution
+    """local_relation must produce a JVM LocalTableScan (no per-execution
     Python boundary — the pickled-ExistingRDD form costs ~0.3s/exec) and
     round-trip values exactly, including NULLs, bigints beyond 2^53,
     decimals and dates."""
@@ -209,7 +209,7 @@ def test_local_relation_is_jvm_local_and_type_exact(spark):
 
     from pyspark.sql import Row
 
-    from columnar_spark.table import _local_relation
+    from columnar_spark.localrel import local_relation
 
     rows = [
         Row(v=(1 << 60) + 7, s="a", d=datetime.date(1995, 3, 15),
@@ -219,7 +219,7 @@ def test_local_relation_is_jvm_local_and_type_exact(spark):
             m=decimal.Decimal("-0.01"), cnt=2 ** 55),
     ]
     src = spark.createDataFrame(rows, "v bigint, s string, d date, m decimal(10,2), cnt bigint")
-    out = _local_relation(spark, src)
+    out = local_relation(spark, src)
     assert out.schema == src.schema
     assert sorted(map(str, out.collect())) == sorted(map(str, src.collect()))
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -12,11 +12,14 @@ import sys
 
 import pytest
 
+# the checkout this test lives in, wherever it is cloned
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 from columnar_spark.session import ext_jar_path
 
 SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 from columnar_spark.session import ext_jar_path
 
@@ -383,12 +386,12 @@ print("JVM-EXT-OK")
 def test_plain_spark_sql_count_rewrite_via_extension():
     env = dict(os.environ)
     out = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", SCRIPT, REPO],
         capture_output=True,
         text=True,
         timeout=600,
         env=env,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
     assert "JVM-EXT-OK" in out.stdout
