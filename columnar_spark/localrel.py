@@ -14,12 +14,23 @@ runs no Spark job at all.
 Shared by the Engine's in-session indexes, the INSERT echo, the append
 path (which recognizes a driver-local batch by its plan) and every
 append-maintenance site that collects a small result to the driver and
-writes it back (stats sketch, value/posting indexes).
+writes it back (stats sketch, value/posting indexes). Point ops read
+small POSIX sidecars straight into one (`read_parquet_local`): a value
+index for `Engine.count`, the query's posting buckets for BM25 search.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# The one size rule for driver-local relations: an in-session value
+# index collected by Engine.build_value_index, an adopted `.vidx`
+# sidecar (footer row count) and a `.ftidx` text sidecar served on the
+# driver (meta n_docs). Larger artifacts keep their distributed plans.
+MAX_LOCAL_ROWS = 100_000
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def local_relation(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -40,12 +51,64 @@ def local_row_count(df: DataFrame) -> "int | None":
     return int(plan.data().size())
 
 
-def local_rows(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+def local_rows(spark: SparkSession, rows: list, schema: "str | StructType") -> DataFrame:
     """LocalRelation over literal driver rows (result echoes and other
     tiny answers) — no Python-RDD, so collecting it starts no Python
-    worker. `schema` is a `name: type, ...` DDL string."""
+    worker. `schema` is a StructType or a `name: type, ...` DDL string."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    names = [f.split(":")[0].strip() for f in schema.split(",")]
-    table = pa.table({n: list(c) for n, c in zip(names, zip(*rows))})
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrow = to_arrow_schema(schema)
+    table = pa.table({f.name: pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)})
+    return spark.createDataFrame(table, schema=schema)
+
+
+def _all_nullable(t):
+    if isinstance(t, list):
+        return [_all_nullable(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    out = {k: (v if k == "metadata" else _all_nullable(v)) for k, v in t.items()}
+    for k in ("nullable", "containsNull", "valueContainsNull"):
+        if k in out:
+            out[k] = True
+    return out
+
+
+def footer_schema(path: str) -> "StructType | None":
+    """The Spark schema a Spark writer recorded in a parquet file's
+    footer, all fields nullable as Spark's file reader reports them;
+    None for a file no Spark writer made. Read on the driver: passing it
+    to `spark.read.schema(...)` skips the schema-inference job."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    return StructType.fromJson(_all_nullable(json.loads(raw)))
+
+
+def read_parquet_local(spark: SparkSession, files: "list[str]", schema: StructType) -> DataFrame:
+    """Spark-written parquet files read with pyarrow into a LocalRelation
+    typed by `schema` (their footer schema) — no Spark job. INT96
+    timestamps read as microseconds, and every timestamp is cast to the
+    Arrow type Spark's own conversion expects, so the values equal a
+    `spark.read.parquet` of the same files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(schema)
+    parts = [
+        pq.read_table(f, columns=schema.names, coerce_int96_timestamp_unit="us")
+        .select(schema.names)
+        .cast(target)
+        for f in files
+    ]
+    table = pa.concat_tables(parts) if parts else target.empty_table()
     return spark.createDataFrame(table, schema=schema)

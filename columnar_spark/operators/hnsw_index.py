@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from columnar_spark.localrel import local_rows
 from columnar_spark.operators.hnsw_py import (
     PY_HNSW_MAX_PARTITION_ROWS,
     HnswIndex,
@@ -634,11 +635,12 @@ _GRAPH_PROBE_MAX_ROWS = 250_000
 
 
 def _graph_parts_if_small(graph_dir: str):
-    """All part states as {part: pandas.DataFrame} when the artifact is
-    under the driver-probe cap, else None — the graph twin of
-    knn_index._b1_rows_if_small. The reconstructed indexes are cached in
-    the same _GRAPH_CACHE the executors use (this is the driver's own
-    python process, so the cache key space is shared naturally)."""
+    """{part: (files, rows)} from the part files' footers when the
+    artifact is under the driver-probe cap, else None — the graph twin
+    of knn_index._b1_rows_if_small. No row is read here: a part's state
+    is read (`_read_part`) only when its reconstructed index is missing
+    from the same _GRAPH_CACHE the executors use (this is the driver's
+    own python process, so the cache key space is shared naturally)."""
     import glob as _glob
     import re as _re
 
@@ -649,11 +651,9 @@ def _graph_parts_if_small(graph_dir: str):
     )
     if not files:
         return None
-    n = sum(pq.read_metadata(f).num_rows for f in files)
-    if n > _GRAPH_PROBE_MAX_ROWS:
+    rows = {f: pq.read_metadata(f).num_rows for f in files}
+    if sum(rows.values()) > _GRAPH_PROBE_MAX_ROWS:
         return None
-    import pandas as pd
-
     # `part` is a hive partition directory (part=N/), not a file column
     by_part: dict = {}
     for f in files:
@@ -662,11 +662,15 @@ def _graph_parts_if_small(graph_dir: str):
             return None  # unexpected layout: let the distributed path read it
         by_part.setdefault(int(m.group(1)), []).append(f)
     return {
-        p: pd.concat(
-            [pq.read_table(f).to_pandas() for f in fs], ignore_index=True
-        )
-        for p, fs in sorted(by_part.items())
+        p: (fs, sum(rows[f] for f in fs)) for p, fs in sorted(by_part.items())
     }
+
+
+def _read_part(files: "list[str]"):
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    return pd.concat([pq.read_table(f).to_pandas() for f in files], ignore_index=True)
 
 
 def knn_query_graph(
@@ -771,12 +775,12 @@ def knn_query_graph(
         if parts is not None:
             allow = frozenset(int(x) for x in allowed) if allowed is not None else None
             hits_all: list = []
-            for part, pdf in parts.items():
+            for part, (files, n_rows) in parts.items():
                 index = _cached_graph(
                     (graph_dir, part, sig),
-                    lambda pdf=pdf, part=part: _index_from_state(
-                        pdf, metric, M, efc, _part_seed(seed, part, len(pdf)),
-                        dim, quantize=qz,
+                    lambda files=files, n_rows=n_rows, part=part: _index_from_state(
+                        _read_part(files), metric, M, efc,
+                        _part_seed(seed, part, n_rows), dim, quantize=qz,
                     ),
                 )
                 nn = min(n_short, len(index._vecs))
@@ -791,9 +795,7 @@ def knn_query_graph(
             hits_all.sort(key=lambda h: (float(h[1]), int(h[0])))
             top = hits_all[:n_short]
             if not quantized:
-                return spark.createDataFrame(
-                    [(int(i), float(d)) for i, d in top], out_schema
-                )
+                return local_rows(spark, [(int(i), float(d)) for i, d in top], out_schema)
             from columnar_spark.operators.knn import knn_topk
 
             pool = rerank_df if rerank_df is not None else spark.read.parquet(table_path)

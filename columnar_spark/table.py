@@ -18,13 +18,14 @@ planner work — pushdown, pruning, broadcast, top-k — is Catalyst's, and
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from columnar_spark.catalog import load_table, table_path
 from columnar_spark.filters import Filter, apply_filters, compile_filters
-from columnar_spark.localrel import local_relation
+from columnar_spark import localrel
+from columnar_spark.localrel import local_relation, local_rows
 from columnar_spark.operators.knn import knn_topk, knn_topk_ivf, train_centroids
 from columnar_spark.plans.explain import AccessPathReport, access_path_report
 from columnar_spark.session import tune
@@ -34,7 +35,18 @@ from columnar_spark.stats import (
     covered_count,
     estimate_selectivity,
     stats_can_match,
+    sums_on_driver,
 )
+
+
+class HeldIndex(NamedTuple):
+    """A value index the Engine holds: `frame` is what SQL rewrites plan
+    over; `local` is the driver-local form Engine.count sums from — the
+    frame itself for a small in-session build, a pyarrow copy of a small
+    adopted sidecar, else None."""
+
+    frame: DataFrame
+    local: "DataFrame | None"
 
 
 class Engine:
@@ -42,7 +54,7 @@ class Engine:
         self.spark = tune(spark)
         self.sf_dir = sf_dir
         self._tables: dict[str, DataFrame] = {}
-        self._value_indexes: dict[tuple[str, str], DataFrame] = {}
+        self._value_indexes: dict[tuple[str, str], HeldIndex] = {}
         self._views: set[str] = set()
         self._manifests: dict[str, dict[str, dict]] = {}
         self._knn_indexes: dict[tuple[str, str], list[list[float]]] = {}
@@ -636,26 +648,30 @@ class Engine:
 
     # -------------------------------------------------------------- count
 
-    def build_value_index(self, name: str, col: str, max_local_rows: int = 100_000) -> None:
+    def build_value_index(self, name: str, col: str, max_local_rows: "int | None" = None) -> None:
         """Build the E6/E7 value->count index for (table, col) — EAGER,
         like the reference's index build (secondary/builder.cpp:849+).
 
-        A low/medium-cardinality index (the intended use; a few KB) is
+        A low/medium-cardinality index (the intended use; a few KB; at
+        most `max_local_rows`, default localrel.MAX_LOCAL_ROWS) is
         collected into a driver-local relation, so plans over it contain
         NO base-table reference at all — the analog of CalcCount reading
         the index artifact instead of the table. Indexes too big to hold
         driver-side stay as a cached distributed DataFrame (still
         index-only at execution; its printed lineage keeps the build
         scan)."""
-        idx = build_value_index(self.table(name), col)
-        if idx.count() <= max_local_rows:
+        self._hold_value_index((name, col), build_value_index(self.table(name), col), max_local_rows)
+
+    def _hold_value_index(self, key: "tuple[str, str]", idx: DataFrame, max_local_rows: "int | None") -> None:
+        limit = localrel.MAX_LOCAL_ROWS if max_local_rows is None else max_local_rows
+        if idx.count() <= limit:
             idx = local_relation(self.spark, idx)
+            self._value_indexes[key] = HeldIndex(idx, idx)
         else:
-            idx = idx.cache()
-        self._value_indexes[(name, col)] = idx
+            self._value_indexes[key] = HeldIndex(idx.cache(), None)
 
     def build_json_field_index(
-        self, name: str, parent: str, json_path: str, max_local_rows: int = 100_000
+        self, name: str, parent: str, json_path: str, max_local_rows: "int | None" = None
     ) -> str:
         """In-session per-field JSON index (reference secondary.cpp:426-433
         flattens JSON attributes into per-field SIs): the value index is
@@ -668,12 +684,7 @@ class Engine:
 
         vname = json_virtual_name(parent, json_path)
         df = self.table(name).withColumn(vname, json_field_expr(parent, json_path))
-        idx = build_value_index(df, vname)
-        if idx.count() <= max_local_rows:
-            idx = local_relation(self.spark, idx)
-        else:
-            idx = idx.cache()
-        self._value_indexes[(name, vname)] = idx
+        self._hold_value_index((name, vname), build_value_index(df, vname), max_local_rows)
         return vname
 
     def load_persisted_value_indexes(self, name: str) -> list[str]:
@@ -681,43 +692,63 @@ class Engine:
         stats.write_value_index at ingest, maintained incrementally on
         append) — the reference's load-the-SI-file path, vs
         build_value_index's build-in-session path. Returns the adopted
-        column names."""
-        from columnar_spark.stats import load_value_index, persisted_value_index_cols
+        column names.
+
+        Each adoption holds two forms of the same listed files in one
+        HeldIndex (stats.adopt_value_index): the file-backed frame SQL
+        rewrites plan over (read under the footer's Spark schema, so no
+        schema-inference job; EXPLAIN names the sidecar), and — for a
+        POSIX sidecar of at most localrel.MAX_LOCAL_ROWS rows — a
+        driver-local copy read with pyarrow, from which Engine.count
+        answers point filters (and any filter over a copy of at most
+        stats._DRIVER_SUM_ROWS rows) in zero Spark jobs."""
+        from columnar_spark.stats import persisted_value_index_cols
 
         table_path = f"{self.sf_dir}/{name}.parquet"
-        adopted = []
-        for c in persisted_value_index_cols(table_path):
-            # load_value_index refuses stale sidecars (signature gate) —
-            # only actually-adopted columns are reported
-            idx = load_value_index(self.spark, table_path, c)
-            if idx is not None:
-                self._value_indexes[(name, c)] = idx
-                adopted.append(c)
-        return adopted
+        # stale sidecars are refused (signature gate) — only actually
+        # adopted columns are reported
+        return [
+            c for c in persisted_value_index_cols(table_path)
+            if self._adopt_value_index(name, c) is not None
+        ]
 
-    def _get_value_index(self, name: str, col: str):
+    def _adopt_value_index(self, name: str, col: str) -> "HeldIndex | None":
+        from columnar_spark.stats import adopt_value_index
+
+        forms = adopt_value_index(self.spark, f"{self.sf_dir}/{name}.parquet", col)
+        if forms is None:
+            return None
+        self._value_indexes[(name, col)] = HeldIndex(*forms)
+        return self._value_indexes[(name, col)]
+
+    def _held_value_index(self, name: str, col: str) -> "HeldIndex | None":
         """In-session index, or lazily adopt the on-disk .vidx sidecar
-        so SQL users get the index-covered rewrites without an explicit
-        load call."""
-        idx = self._value_indexes.get((name, col))
-        if idx is not None:
-            return idx
-        from columnar_spark.stats import load_value_index
+        (both forms, see load_persisted_value_indexes) so SQL users get
+        the index-covered rewrites without an explicit load call."""
+        held = self._value_indexes.get((name, col))
+        return held if held is not None else self._adopt_value_index(name, col)
 
-        idx = load_value_index(self.spark, f"{self.sf_dir}/{name}.parquet", col)
-        if idx is not None:
-            self._value_indexes[(name, col)] = idx
-        return idx
+    def _get_value_index(self, name: str, col: str) -> "DataFrame | None":
+        """The index frame SQL rewrites plan over (see _held_value_index)."""
+        held = self._held_value_index(name, col)
+        return None if held is None else held.frame
 
     def count(self, name: str, filters: Sequence[Filter] = ()) -> int:
         """COUNT(*) with filters; answered from a value index alone when a
         single-column filter is covered (CalcCount parity, E6). The index
         is looked up like Engine.sql's: in-session, else the fresh on-disk
-        sidecar (re-adopted after DML dropped the session copy)."""
+        sidecar (re-adopted after DML dropped the session copy). A
+        driver-local index (in-session build or adopted sidecar, at most
+        localrel.MAX_LOCAL_ROWS rows) answers with no Spark job — for a
+        range, NOT or NOT NULL filter only up to stats._DRIVER_SUM_ROWS
+        index rows (stats.sums_on_driver); other counts aggregate over the
+        index frame."""
         if len(filters) == 1:
-            idx = self._get_value_index(name, filters[0].name)
-            if idx is not None:
-                n = covered_count(idx, filters[0])
+            f = filters[0]
+            held = self._held_value_index(name, f.name)
+            if held is not None:
+                local = held.local is not None and sums_on_driver(held.local, f)
+                n = covered_count(held.local if local else held.frame, f)
                 if n is not None:
                     return n
         return self.scan(name, filters).count()
@@ -800,7 +831,7 @@ class Engine:
                 )
             except Exception:  # noqa: BLE001 — fall back to the default render
                 plan = jqe.toString()
-            return self.spark.createDataFrame([(plan,)], "plan: string")
+            return local_rows(self.spark, [(plan,)], "plan: string")
 
         # CALL PQ('queries_table', 'document text' [, 'boolean']) — the
         # daemon's percolate call: stored queries are the table, the
@@ -1226,7 +1257,6 @@ class Engine:
         if m:
             from pyspark.sql import functions as _F
 
-            from columnar_spark.localrel import local_rows
             from columnar_spark.stats import footer_row_count
             from columnar_spark.streaming.ingest import append_batch
 
@@ -1283,7 +1313,8 @@ class Engine:
                 self.spark, f"{self.sf_dir}/{name}.parquet", m.group(2)
             )
             self._invalidate_table_caches(name)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("delete", name, n_del, n_rows)],
                 "op: string, table: string, n_affected: bigint, n_rows: bigint",
             )
@@ -1322,7 +1353,8 @@ class Engine:
                 m.group(3),
             )
             self._invalidate_table_caches(name)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("update", name, n_match, n_rows)],
                 "op: string, table: string, n_affected: bigint, n_rows: bigint",
             )
@@ -1354,7 +1386,8 @@ class Engine:
                 col = m.group(4)
                 write_value_index(self.spark, base, col)
             self._value_indexes.pop((name, col), None)  # re-adopt lazily
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("value_index", col, f"{base}.vidx/{col}")],
                 "kind: string, column: string, path: string",
             )
@@ -1370,7 +1403,8 @@ class Engine:
             write_text_index(
                 self.spark, base, text_col=m.group(2), id_col=m.group(3) or "doc_id"
             )
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("text_index", m.group(2), f"{base}.ftidx")],
                 "kind: string, column: string, path: string",
             )
@@ -1405,7 +1439,8 @@ class Engine:
                 dim_cols=carry,
                 cluster_by=cluster,
             )
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("join_projection", pname, f"{fact_base}.proj/{pname}")],
                 "kind: string, column: string, path: string",
             )
@@ -1424,7 +1459,8 @@ class Engine:
             if existed:
                 shutil.rmtree(p)
             self.spark.catalog.dropTempView(pname)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("join_projection", pname, p if existed else "absent")],
                 "kind: string, column: string, path: string",
             )
@@ -1449,7 +1485,8 @@ class Engine:
 
             fact_base = f"{self.sf_dir}/{fact}.parquet"
             write_agg_projection(self.spark, fact_base, name=pname, **spec)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("aggregate_projection", pname, f"{fact_base}.aggproj/{pname}")],
                 "kind: string, column: string, path: string",
             )
@@ -1467,7 +1504,8 @@ class Engine:
             existed = os.path.isdir(p)
             if existed:
                 shutil.rmtree(p)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("aggregate_projection", pname, p if existed else "absent")],
                 "kind: string, column: string, path: string",
             )
@@ -1486,7 +1524,8 @@ class Engine:
             if existed:
                 shutil.rmtree(p)
             self._value_indexes.pop((name, col), None)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("value_index", col, p if existed else "absent")],
                 "kind: string, column: string, path: string",
             )
@@ -1508,7 +1547,8 @@ class Engine:
             base = f"{self.sf_dir}/{name}.parquet"
             if os.path.isdir(base):
                 if m.group("ine"):
-                    return self.spark.createDataFrame(
+                    return local_rows(
+                        self.spark,
                         [("create_table", name, 0, 0)],
                         "op: string, table: string, n_affected: bigint, n_rows: bigint",
                     )
@@ -1581,7 +1621,8 @@ class Engine:
 
                 write_text_index(self.spark, base, text_col=tidx[0], id_col=tidx[1])
             self._invalidate_table_caches(name)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("create_table", name, 1, 0)],
                 "op: string, table: string, n_affected: bigint, n_rows: bigint",
             )
@@ -1655,7 +1696,8 @@ class Engine:
                 f"{self.sf_dir}/{m.group(1)}.parquet",
                 retain_last=int(m.group(2) or 1),
             )
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [(m.group(1), len(removed), ",".join(map(str, removed)))],
                 "table: string, n_removed: bigint, removed_versions: string",
             )
@@ -1680,7 +1722,8 @@ class Engine:
             retired_as = restore(base, version)
             reindex_table(self.spark, base)
             self._invalidate_table_caches(name)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("restore", name, version, retired_as)],
                 "op: string, table: string, restored_version: bigint, retired_as: bigint",
             )
@@ -1741,7 +1784,8 @@ class Engine:
             name = m.group(1)
             n = truncate_table(self.spark, f"{self.sf_dir}/{name}.parquet")
             self._invalidate_table_caches(name)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("truncate", name, n, 0)],
                 "op: string, table: string, n_affected: bigint, n_rows: bigint",
             )
@@ -1767,7 +1811,8 @@ class Engine:
             if existed:
                 shutil.rmtree(base)
             self._invalidate_table_caches(name)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("drop_table", name, int(existed), len(dropped))],
                 "op: string, table: string, n_affected: bigint, n_rows: bigint",
             )
@@ -1789,7 +1834,8 @@ class Engine:
                 m.group(4),
             )
             self._invalidate_table_caches(name)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("alter_add", name, n, n)],
                 "op: string, table: string, n_affected: bigint, n_rows: bigint",
             )
@@ -1806,7 +1852,8 @@ class Engine:
                 self.spark, f"{self.sf_dir}/{name}.parquet", m.group(2)
             )
             self._invalidate_table_caches(name)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("alter_drop", name, n, n)],
                 "op: string, table: string, n_affected: bigint, n_rows: bigint",
             )
@@ -1861,7 +1908,8 @@ class Engine:
             for fpath, pname in agg_projections_referencing(base):
                 rebuild_agg_projection(self.spark, fpath, pname)
             self._invalidate_table_caches(name)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("optimize", name, before, after)],
                 "op: string, table: string, files_before: bigint, files_after: bigint",
             )
@@ -1918,7 +1966,8 @@ class Engine:
                     )
             tail = ("\n  , " + "\n  , ".join(clauses)) if clauses else ""
             ddl = f"CREATE TABLE {name} (\n  {cols}{tail}\n)"
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [(name, ddl)], "table: string, create_table: string"
             )
 
@@ -2454,20 +2503,28 @@ class Engine:
     ) -> DataFrame:
         """Full-text entry point, sidecar-aware: BM25 / boolean / phrase
         over `name`, served from a persisted `.ftidx` when the table
-        carries one (identical results either way — parity pinned)."""
+        carries one (identical results either way — parity pinned).
+
+        BM25 goes straight to bm25_search_indexed, which reads the
+        sidecar's meta.json once and serves a POSIX sidecar of at most
+        localrel.MAX_LOCAL_ROWS documents on the driver (no Spark job, no
+        Python worker) and a larger one with its Spark plan; a table
+        without a sidecar is scanned. Boolean and phrase modes load the
+        index frames once."""
         from columnar_spark.operators import fulltext as FT
 
         path = f"{self.sf_dir}/{name}.parquet"
+        if mode == "bm25":
+            try:
+                return FT.bm25_search_indexed(self.spark, path, query, k=k)
+            except FileNotFoundError:
+                return FT.bm25_search(self.table(name), query, k=k, id_col=id_col, text_col=text_col)
         df = self.table(name)
         loaded = FT.load_text_index(self.spark, path)
         postings = loaded[0] if loaded else None
         # the sidecar's analyzer maps query terms into the index's term
         # space (a stemmed index would otherwise silently return empty)
         analyzer = loaded[2].get("analyzer") if loaded else None
-        if mode == "bm25":
-            if loaded:
-                return FT.bm25_search_indexed(self.spark, path, query, k=k)
-            return FT.bm25_search(df, query, k=k, id_col=id_col, text_col=text_col)
         # deterministic cutoff: boolean/phrase matches carry no score, so
         # order by doc_id before limiting (an unordered .limit(k) is
         # partition-dependent and can change run to run)

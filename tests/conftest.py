@@ -51,3 +51,52 @@ def spark():
     s = get_spark("columnar-spark-tests", cpus=4)
     s.conf.set("spark.sql.shuffle.partitions", "4")
     yield s
+
+
+def _pyworker_ticks() -> int:
+    """CPU clock ticks (reaped children included) of the live non-JVM
+    descendants of this process: Spark's Python daemon and workers."""
+    me = os.getpid()
+    procs = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as fh:
+                raw = fh.read()
+        except OSError:
+            continue
+        comm = raw[raw.index("(") + 1 : raw.rindex(")")]
+        f = raw[raw.rindex(")") + 2 :].split()
+        procs[int(d)] = (int(f[1]), comm, sum(int(x) for x in f[11:15]))
+    ticks, todo, seen = 0, [me], set()
+    while todo:
+        p = todo.pop()
+        seen.add(p)
+        for c, (ppid, comm, cpu) in procs.items():
+            if ppid == p and c not in seen:
+                ticks += cpu if comm != "java" else 0
+                todo.append(c)
+    return ticks
+
+
+@pytest.fixture()
+def spark_cost(spark):
+    """`spark_cost(fn) -> (fn(), spark_jobs, pyworker_ticks)`: the Spark
+    jobs fn ran (its own job group) and the CPU ticks Python workers
+    spent meanwhile."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"cost-{uuid.uuid4().hex}"
+        t0 = _pyworker_ticks()
+        sc.setJobGroup(group, "job budget", False)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group)), _pyworker_ticks() - t0
+
+    return run

@@ -262,6 +262,23 @@ def test_count_reads_value_index_after_insert(spark, events_eng, monkeypatch):
     ).count()
 
 
+def test_count_after_insert_runs_no_spark_job(spark, events_eng, spark_cost):
+    """After INSERT dropped the session index, Engine.count re-adopts the
+    merged sidecar as a driver-local relation and answers fresh in zero
+    Spark jobs, with no Python worker."""
+    from columnar_spark.filters import Filter, FilterType
+
+    events_eng.load_persisted_value_indexes("events")
+    f = Filter("event_type", FilterType.STRINGS, strings=["buy"])
+    events_eng.count("events", [f])  # warm the session
+    _insert_events(spark, events_eng, 300, 340)
+    n, jobs, ticks = spark_cost(lambda: events_eng.count("events", [f]))
+    assert (jobs, ticks) == (0, 0)
+    assert n == spark.read.parquet(f"{events_eng.sf_dir}/events.parquet").where(
+        "event_type = 'buy'"
+    ).count()
+
+
 def test_small_insert_job_budget_and_one_file(spark, events_eng):
     """A small INSERT maintaining every sidecar runs a fixed, small
     number of Spark jobs (the same on every append) and lands as one

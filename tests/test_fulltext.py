@@ -280,3 +280,133 @@ def test_bm25f_field_weights(spark):
     for i in (1, 2):
         want = idf * wtf[i] / (1.2 * (0.25 + 0.75 * wlen[i] / avg) + wtf[i])
         assert math.isclose(out[i], want, rel_tol=1e-12)
+
+
+# ---------------------------------------------- driver-served BM25 search
+
+TIED = DOCS + [
+    (7, "vector scan merge"),
+    (8, "vector scan merge"),
+    (9, "the tables scanned rows merges"),
+    (10, "scans of vectors and the joins"),
+]
+QUERIES = ["vector scan merge", "scan", "the tables rows", "fox dog", "zzz qqq", "merges joins vectors"]
+
+
+def _driver_equals_plan(spark, monkeypatch, path, query, k):
+    """bm25_search_indexed served on the driver equals the Spark plan
+    (forced by a zero row cap) row for row, with the same schema."""
+    from columnar_spark import localrel
+
+    drv = FT.bm25_search_indexed(spark, path, query, k=k)
+    assert localrel.local_row_count(drv) is not None, "not served on the driver"
+    with monkeypatch.context() as m:
+        m.setattr(localrel, "MAX_LOCAL_ROWS", 0)
+        plan = FT.bm25_search_indexed(spark, path, query, k=k)
+        assert localrel.local_row_count(plan) is None
+        want = [tuple(r) for r in plan.collect()]
+    assert drv.schema == plan.schema
+    got = [tuple(r) for r in drv.collect()]
+    assert got == want, (query, k)
+    return got
+
+
+@pytest.mark.parametrize(
+    "analyzer", [None, {"stem": True, "stopwords": ["the", "of", "and", "a"]}], ids=["plain", "stem_stop"]
+)
+def test_bm25_driver_path_matches_spark_plan(spark, tmp_path, monkeypatch, analyzer):
+    p = str(tmp_path / "tied.parquet")
+    spark.createDataFrame(TIED, "doc_id long, text string").write.parquet(p)
+    FT.write_text_index(spark, p, analyzer=analyzer)
+    for q in QUERIES:
+        for k in (3, 50):  # 50 > every match count
+            _driver_equals_plan(spark, monkeypatch, p, q, k)
+    # score ties order by doc_id
+    rows = _driver_equals_plan(spark, monkeypatch, p, "vector scan merge", 10)
+    tied = [d for d, s in rows if s == dict(rows)[7]]
+    assert tied == sorted(tied) and {7, 8} <= set(tied)
+    # no matching term: empty frame, same schema
+    assert _driver_equals_plan(spark, monkeypatch, p, "zzz qqq", 5) == []
+
+
+def test_bm25_driver_path_reads_committed_deltas(spark, tmp_path, monkeypatch):
+    full = spark.createDataFrame(TIED, "doc_id long, text string")
+    p = str(tmp_path / "inc.parquet")
+    full.filter(F.col("doc_id") <= 4).write.parquet(p)
+    FT.write_text_index(spark, p)
+    for lo, hi in ((5, 7), (8, 10)):
+        batch = full.filter(F.col("doc_id").between(lo, hi))
+        batch.write.mode("append").parquet(p)
+        FT.append_to_text_index(spark, p, batch)
+    assert len(FT.text_index_meta(p)["deltas"]) == 2
+    p_full = str(tmp_path / "full.parquet")
+    full.write.parquet(p_full)
+    FT.write_text_index(spark, p_full)
+    for q in QUERIES:
+        got = _driver_equals_plan(spark, monkeypatch, p, q, 10)
+        assert got == [tuple(r) for r in FT.bm25_search_indexed(spark, p_full, q, k=10).collect()]
+
+
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_bm25_driver_path_keeps_doc_id_type(spark, tmp_path, monkeypatch, id_type):
+    p = str(tmp_path / f"ids_{id_type}.parquet")
+    rows = [((str(d) if id_type == "string" else d), t) for d, t in TIED]
+    spark.createDataFrame(rows, f"doc_id {id_type}, text string").write.parquet(p)
+    FT.write_text_index(spark, p)
+    got = _driver_equals_plan(spark, monkeypatch, p, "vector scan merge", 10)
+    assert got and all(isinstance(d, str if id_type == "string" else int) for d, _s in got)
+    assert FT.bm25_search_indexed(spark, p, "scan", k=3).schema["doc_id"].dataType.simpleString() == id_type
+
+
+def test_engine_bm25_search_runs_no_spark_job(spark, tmp_path, spark_cost):
+    from columnar_spark.table import Engine
+
+    p = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(TIED, "doc_id long, text string").write.parquet(p)
+    FT.write_text_index(spark, p)
+    eng = Engine(spark, str(tmp_path))
+    eng.search("docs", "vector scan", k=3).collect()  # warm the session
+    rows, jobs, ticks = spark_cost(lambda: eng.search("docs", "vector scan merge", k=5).collect())
+    assert (jobs, ticks) == (0, 0)
+    ref = FT.bm25_reference(TIED, "vector scan merge")
+    want = sorted(ref, key=lambda d: (-round(ref[d], 6), d))[:5]
+    assert [r["doc_id"] for r in rows] == want
+    for r in rows:
+        assert math.isclose(r["score"], ref[r["doc_id"]], abs_tol=1e-6)
+
+
+def test_bm25_driver_path_matches_plan_on_a_larger_corpus(spark, tmp_path, monkeypatch):
+    """400 documents over a 10-word vocabulary (many equal scores, so the
+    top-k cut falls inside tie groups), with doc ids repeated inside the
+    base and again in a committed delta (the doc_id join fans out)."""
+    import random
+
+    rnd = random.Random(7)
+    vocab = "alpha beta gamma delta eps zeta eta theta iota kappa".split()
+
+    def doc(i):
+        return (i, " ".join(rnd.choice(vocab) for _ in range(rnd.randint(1, 6))))
+
+    p = str(tmp_path / "larger.parquet")
+    spark.createDataFrame([doc(i % 350) for i in range(400)], "doc_id long, text string").write.parquet(p)
+    FT.write_text_index(spark, p)
+    batch = spark.createDataFrame([doc(i) for i in range(40)], "doc_id long, text string")
+    batch.write.mode("append").parquet(p)
+    FT.append_to_text_index(spark, p, batch)
+    for q in ("alpha", "beta gamma", "kappa iota eta", "zeta omega"):
+        for k in (1, 37):
+            assert _driver_equals_plan(spark, monkeypatch, p, q, k)
+
+
+def test_bm25_top_k_rounds_before_the_cut():
+    """A document whose unrounded score is just below the k-th best but
+    rounds to the same 6-dp value wins the cut on doc_id, as in the
+    Spark plan's ORDER BY round(score, 6) DESC, doc_id."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids = pa.array([5, 3, 9, 1], pa.int64())
+    scores = np.array([0.1234569, 0.1234565, 0.5, 0.1234549])
+    assert FT._top_k_rounded(ids, scores, 2) == [(9, 0.5), (3, 0.123457)]
+    assert FT._top_k_rounded(ids, scores, 3) == [(9, 0.5), (3, 0.123457), (5, 0.123457)]
+    assert FT._top_k_rounded(ids, scores, 9) == [(9, 0.5), (3, 0.123457), (5, 0.123457), (1, 0.123455)]

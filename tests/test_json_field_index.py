@@ -233,6 +233,6 @@ def test_engine_value_index_local_relation_plan(spark):
     eng = Engine(spark, SF)
     eng.register_views(["events"])
     vname = eng.build_json_field_index("events", "props", "$.k")
-    idx = eng._value_indexes[("events", vname)]
+    idx = eng._value_indexes[("events", vname)].frame
     plan = idx._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan

@@ -548,3 +548,132 @@ def test_engine_sql_two_key_group_from_composite_index(spark, tmp_path):
         (x, y): sum(r[0] for r in rows if r[1] == x and r[2] == y)
         for (x, y) in want
     }
+
+
+# ------------------------------------------ driver-local adopted indexes
+
+def test_adopted_index_counts_in_no_spark_job(spark, tmp_path, spark_cost):
+    from columnar_spark.filters import Filter, FilterType
+
+    sf = str(tmp_path)
+    path = f"{sf}/orders.parquet"
+    spark.range(3000).select(
+        F.col("id").alias("o_orderkey"), (F.col("id") % 97).alias("o_custkey")
+    ).write.parquet(path)
+    write_value_index(spark, path, "o_custkey")
+    eng = Engine(spark, sf)
+    assert eng.load_persisted_value_indexes("orders") == ["o_custkey"]
+    key = spark.read.parquet(path).first()["o_custkey"]
+    f = Filter("o_custkey", FilterType.VALUES, values=[key])
+    eng.count("orders", [f])  # warm the session
+    n, jobs, ticks = spark_cost(lambda: eng.count("orders", [f]))
+    assert (jobs, ticks) == (0, 0)
+    assert n == spark.read.parquet(path).where(F.col("o_custkey") == key).count()
+
+
+def test_adopted_index_sums_point_filters_on_driver_at_any_size(spark, tmp_path, spark_cost, monkeypatch):
+    """Past the driver-sum row bound a range count is Spark's aggregate
+    over the sidecar files; a point filter still sums on the driver.
+    Both stay exact."""
+    from columnar_spark import stats
+    from columnar_spark.filters import Filter, FilterType
+
+    sf = str(tmp_path)
+    path = f"{sf}/orders.parquet"
+    spark.range(3000).select(
+        F.col("id").alias("o_orderkey"), (F.col("id") % 97).alias("o_custkey")
+    ).write.parquet(path)
+    write_value_index(spark, path, "o_custkey")
+    eng = Engine(spark, sf)
+    assert eng.load_persisted_value_indexes("orders") == ["o_custkey"]
+    monkeypatch.setattr(stats, "_DRIVER_SUM_ROWS", 10)
+    base = spark.read.parquet(path)
+    point = Filter("o_custkey", FilterType.VALUES, values=[5, 7])
+    rng = Filter("o_custkey", FilterType.RANGE, min_value=10, max_value=60)
+    n, jobs, _ = spark_cost(lambda: eng.count("orders", [point]))
+    assert jobs == 0 and n == base.where(F.col("o_custkey").isin(5, 7)).count()
+    n, jobs, _ = spark_cost(lambda: eng.count("orders", [rng]))
+    assert jobs > 0 and n == base.where(F.col("o_custkey").between(10, 60)).count()
+
+
+def test_in_session_rebuild_replaces_adopted_copy(spark, tmp_path):
+    """An index built in session replaces both forms of an adopted one:
+    after rows land in the table outside the Engine and the index is
+    rebuilt (held as a cached frame, no driver copy), Engine.count
+    answers from the rebuilt index, not the adopted copy."""
+    from columnar_spark.filters import Filter, FilterType
+
+    sf = str(tmp_path)
+    path = f"{sf}/orders.parquet"
+    rows = spark.range(300).select(
+        F.col("id").alias("o_orderkey"), (F.col("id") % 7).alias("o_custkey")
+    )
+    rows.write.parquet(path)
+    write_value_index(spark, path, "o_custkey")
+    eng = Engine(spark, sf)
+    assert eng.load_persisted_value_indexes("orders") == ["o_custkey"]
+    f = Filter("o_custkey", FilterType.VALUES, values=[3])
+    assert eng.count("orders", [f]) == 43
+    rows.write.mode("append").parquet(path)
+    eng.build_value_index("orders", "o_custkey", max_local_rows=0)
+    assert eng._value_indexes[("orders", "o_custkey")].local is None
+    assert eng.count("orders", [f]) == 86
+
+
+def test_local_adoption_counts_like_file_backed_index(spark, tmp_path):
+    """A sidecar read with pyarrow under its footer schema counts exactly
+    like the Spark read of the same files, for values Arrow and Spark
+    must agree on: bigint beyond 2^53, NULL, decimal, date, timestamp,
+    string."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from columnar_spark.filters import Filter, FilterType
+    from columnar_spark.localrel import local_row_count
+    from columnar_spark.stats import adopt_value_index, covered_count
+
+    big = 2**53 + 1
+    rows = [
+        (big, Decimal("12.34"), dt.date(2020, 1, 2), dt.datetime(2021, 3, 4, 5, 6, 7, 123456), "a"),
+        (big + 2, Decimal("-0.01"), dt.date(1969, 12, 31), dt.datetime(1900, 1, 1), "é"),
+        (None, None, None, None, None),
+        (big, Decimal("12.34"), dt.date(2020, 1, 2), dt.datetime(2021, 3, 4, 5, 6, 7, 123456), "a"),
+        (-(2**62), Decimal("99999999.99"), dt.date(9999, 12, 31), dt.datetime(2262, 4, 12, 0, 0, 1), "b"),
+    ]
+    path = str(tmp_path / "types.parquet")
+    spark.createDataFrame(
+        rows, "b bigint, d decimal(10,2), dt date, ts timestamp, s string"
+    ).write.parquet(path)
+    cases = {
+        "b": [
+            Filter("b", FilterType.VALUES, values=[big]),
+            Filter("b", FilterType.VALUES, values=[big + 1]),
+            Filter("b", FilterType.VALUES, values=[big], exclude=True),
+            Filter("b", FilterType.RANGE, min_value=big + 1),
+        ],
+        "d": [
+            Filter("d", FilterType.FLOATRANGE, min_value=0.0),
+            Filter("d", FilterType.NOTNULL, exclude=True),
+        ],
+        "dt": [
+            Filter("dt", FilterType.RANGE, min_value=dt.date(2000, 1, 1)),
+            Filter("dt", FilterType.NOTNULL),
+        ],
+        "ts": [
+            Filter("ts", FilterType.RANGE, max_value=dt.datetime(2021, 3, 4, 5, 6, 7, 123456)),
+            Filter("ts", FilterType.RANGE, min_value=dt.datetime(2021, 3, 4, 5, 6, 7, 123457)),
+        ],
+        "s": [
+            Filter("s", FilterType.STRINGS, strings=["a"]),
+            Filter("s", FilterType.STRINGS, strings=["é", "b"]),
+            Filter("s", FilterType.STRINGS, strings=["a"], exclude=True),
+        ],
+    }
+    for col, filters in cases.items():
+        write_value_index(spark, path, col)
+        files, local = adopt_value_index(spark, path, col)
+        assert local_row_count(local) is not None and local_row_count(files) is None
+        assert local.schema == files.schema
+        assert sorted(map(str, local.collect())) == sorted(map(str, files.collect()))
+        for f in filters:
+            assert covered_count(local, f) == covered_count(files, f), (col, f)
