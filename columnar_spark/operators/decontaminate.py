@@ -186,7 +186,9 @@ def _semantic_report_expr(
     corpus = corpus_emb.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv")
     ).withColumn("__cn", norm(F.col("__cv")))
-    sim = dot(F.col("__cv"), F.col("__bv")) / (F.col("__cn") * F.col("__bn"))
+    # a zero-norm pair scores NULL (no hit), as the kernel's NaN does
+    den = F.col("__cn") * F.col("__bn")
+    sim = F.when(den != 0, dot(F.col("__cv"), F.col("__bv")) / den)
     return (
         corpus.crossJoin(bench)
         .select(F.col(id_col), sim.alias("__sim"))
@@ -323,7 +325,10 @@ def semantic_contamination_report(
                         acc += x * y
                     for y in b:
                         bnorm_acc += y * y
-                    s = acc / (vn * bnorm_acc ** 0.5)
+                    den = vn * bnorm_acc ** 0.5
+                    if den == 0:
+                        continue  # zero-norm pair: NaN, no hit
+                    s = acc / den
                     if s >= thr:
                         hits += 1
                         mx = s if mx is None or s > mx else mx

@@ -110,198 +110,14 @@ def _rewrite_and_reindex(
 def reindex_table(spark, path: str, fmt: str = "parquet") -> None:
     """Bring EVERY sidecar in line with the table's current contents —
     the shared tail of all row mutations, and the public repair entry
-    for any out-of-band rewrite (RESTORE, manual overwrite). JSON field
-    indexes are invalidated, not rebuilt (disable-on-update,
-    secondary.cpp:426-433); plain value/posting indexes rebuild; the
-    stats/rollup/text/vector artifacts refresh or disable themselves."""
-    from columnar_spark.stats import (
-        invalidate_json_field_indexes,
-        json_index_meta,
-        persisted_posting_index_cols,
-        persisted_value_index_cols,
-        posting_index_id_col,
-        write_posting_index,
-        write_value_index,
-    )
+    for any out-of-band rewrite (RESTORE, manual overwrite). Each kind
+    in sidecars.KINDS is rebuilt from the new table or dropped: JSON
+    field indexes are dropped (disable-on-update, secondary.cpp:426-433),
+    and an artifact whose rebuild fails is removed, so nothing serves
+    stale data."""
+    from columnar_spark.sidecars import reindex
 
-    invalidate_json_field_indexes(path)
-    from columnar_spark.stats import value_index_measures
-
-    for c in persisted_value_index_cols(path):
-        if json_index_meta(path, c) is not None:
-            continue  # already swept above (defensive)
-        ms = value_index_measures(path, c)
-        write_value_index(
-            spark, path, c, fmt,
-            measures=[(mc, int(dp)) for mc, dp in ms] if ms else None,
-        )
-    for c in persisted_posting_index_cols(path):
-        idc = posting_index_id_col(path, c)
-        if idc:
-            write_posting_index(spark, path, c, idc, fmt)
-    _refresh_derived_sidecars(spark, path, fmt)
-
-
-def _refresh_derived_sidecars(spark, path: str, fmt: str) -> None:
-    """Bring the remaining sidecars in line with a rewritten table. Row
-    mutation invalidates EVERY derived artifact, not just the value
-    indexes: a stale stats manifest would mis-serve the whole-table
-    MIN/MAX/COUNT rewrites AND falsely validate the rollup freshness
-    gate (stale-vs-stale agree); a stale .ftidx keeps returning deleted
-    documents; a stale .knn returns deleted vectors. Each artifact
-    carries enough meta to rebuild faithfully; a rebuild that fails
-    removes the artifact instead (disable-on-update, the reference's
-    JSON-index behavior) so nothing serves stale data. All rebuild
-    plans run with rewrites disabled — they must read the base table."""
-    import json
-    import os
-    import shutil
-
-    from columnar_spark.stats import (
-        build_stats_manifest,
-        rewrites_disabled,
-        write_stats_sidecar,
-    )
-
-    new = getattr(spark.read, fmt)(path)
-    base = path.rstrip("/")
-    with rewrites_disabled(spark):
-        write_stats_sidecar(spark, build_stats_manifest(new), base)
-
-        from columnar_spark.streaming.rollup import rebuild_rollup_sidecars
-
-        rebuild_rollup_sidecars(new, path)
-
-        croot = base + ".cohort"
-        if os.path.isdir(croot):
-            try:
-                from columnar_spark.operators.cohort import (
-                    cohort_meta,
-                    write_cohort_sidecar,
-                )
-
-                cm = cohort_meta(path)
-                write_cohort_sidecar(
-                    spark, path, cm["ts_col"], cm["user_col"]
-                )
-            except Exception:
-                shutil.rmtree(croot, ignore_errors=True)
-
-        troot = base + ".ftidx"
-        if os.path.isdir(troot):
-            try:
-                with open(os.path.join(troot, "meta.json")) as fh:
-                    tmeta = json.load(fh)
-                from columnar_spark.operators.fulltext import write_text_index
-
-                write_text_index(
-                    spark,
-                    path,
-                    text_col=tmeta.get("text_col", "text"),
-                    id_col=tmeta.get("id_col", "doc_id"),
-                    fmt=fmt,
-                    analyzer=tmeta.get("analyzer"),
-                )
-            except Exception:
-                shutil.rmtree(troot, ignore_errors=True)
-
-        from columnar_spark.operators.knn_index import vector_index_dirs
-
-        def _disable_artifact(d: str) -> None:
-            # Disable-on-failure must not take out healthy siblings: the
-            # ROOT .knn/.knn-graph layout NESTS per-attribute `col=*`
-            # artifacts, so rmtree(root) on a root-only rebuild failure
-            # would destroy every other column's index too. Delete only
-            # the dir's own payload and keep col=* subdirs.
-            if not os.path.isdir(d):
-                return
-            for entry in os.listdir(d):
-                if entry.startswith("col="):
-                    continue
-                p = os.path.join(d, entry)
-                if os.path.isdir(p):
-                    shutil.rmtree(p, ignore_errors=True)
-                else:
-                    try:
-                        os.remove(p)
-                    except OSError:
-                        pass
-            if not os.listdir(d):  # no col=* siblings -> drop the dir too
-                shutil.rmtree(d, ignore_errors=True)
-
-        for kdir in vector_index_dirs(path):
-            try:
-                km = spark.read.parquet(os.path.join(kdir, "meta.parquet")).first()
-                from columnar_spark.operators.knn_index import build_vector_index
-
-                build_vector_index(
-                    spark,
-                    new,
-                    path,
-                    vec_col=km["vec_col"],
-                    id_col=km["id_col"],
-                    metric=km["metric"],
-                    nlist=km["nlist"],
-                    m=km["m"],
-                    k=km["k"],
-                    index_path=kdir,
-                )
-            except Exception:
-                _disable_artifact(kdir)
-
-        from columnar_spark.operators.hnsw_index import graph_index_dirs
-
-        for gdir in graph_index_dirs(path):
-            try:
-                from columnar_spark.operators.hnsw_index import (
-                    build_graph_index,
-                    load_graph_index_meta,
-                )
-
-                gm = load_graph_index_meta(path, check_fresh=False, index_path=gdir)
-                build_graph_index(
-                    spark,
-                    new,
-                    path,
-                    vec_col=gm["vec_col"],
-                    id_col=gm["id_col"],
-                    metric=gm["metric"],
-                    M=gm["m"],
-                    ef_construction=gm["ef_construction"],
-                    num_parts=gm["num_parts"],
-                    seed=gm["seed"],
-                    quantize=gm["quantize"],
-                    index_path=gdir,
-                    q8_bounds=(
-                        (gm["q8_lo"], gm["q8_hi"])
-                        if gm["q8_lo"] is not None
-                        else None
-                    ),
-                )
-            except Exception:
-                _disable_artifact(gdir)
-
-        # Aggregate projections (this table as source or as an
-        # enrichment dim of a sibling's): DML changed row content, so
-        # the declared group-by partials are recomputed from scratch;
-        # a failed rebuild removes the artifact (disable-on-update) so
-        # nothing serves stale aggregates.
-        from columnar_spark.aggprojections import (
-            agg_projection_path,
-            agg_projections_on,
-            agg_projections_referencing,
-            rebuild_agg_projection,
-        )
-
-        for fpath, pname in [
-            (path, n) for n in agg_projections_on(path)
-        ] + agg_projections_referencing(path):
-            try:
-                rebuild_agg_projection(spark, fpath, pname)
-            except Exception:
-                shutil.rmtree(
-                    agg_projection_path(fpath, pname), ignore_errors=True
-                )
+    reindex(spark, path, fmt)
 
 
 def delete_where(spark, path: str, condition: str, fmt: str = "parquet") -> tuple[int, int]:
@@ -402,33 +218,13 @@ def alter_add_column(
 
 def alter_drop_column(spark, path: str, col: str, fmt: str = "parquet") -> int:
     """`ALTER TABLE t DROP COLUMN c` — CoW rewrite without the column.
-    Any persisted value/posting index keyed by the column (or JSON field
-    index rooted at it) is removed first — rebuilding it against the new
-    schema would fail, and the reference likewise drops attribute
-    indexes with their attribute. Returns the row count."""
-    import shutil
-
-    from columnar_spark.stats import (
-        json_index_meta,
-        persisted_posting_index_cols,
-        persisted_value_index_cols,
-        posting_index_path,
-        value_index_path,
-    )
-
+    Any sidecar keyed by the column (a value/posting index, a JSON field
+    index rooted at it, a vector index over it) fails to rebuild against
+    the new schema and is removed — the reference likewise drops
+    attribute indexes with their attribute. Returns the row count."""
     target = getattr(spark.read, fmt)(path)
     if col not in target.columns:
         raise ValueError(f"ALTER: unknown column {col!r}")
-    for c in persisted_value_index_cols(path):
-        jm = json_index_meta(path, c)
-        keyed_by = jm["parent"] if jm else c
-        if keyed_by == col:
-            shutil.rmtree(value_index_path(path, c), ignore_errors=True)
-    for c in persisted_posting_index_cols(path):
-        from columnar_spark.stats import posting_index_id_col
-
-        if c == col or posting_index_id_col(path, c) == col:
-            shutil.rmtree(posting_index_path(path, c), ignore_errors=True)
     n = target.count()
     _rewrite_and_reindex(
         spark, path, target.drop(col), op="alter_drop", fmt=fmt, n_rows_before=n

@@ -37,11 +37,7 @@ dearer at 30k-75k. The merges that collect a small result (stats
 sketch, value and posting indexes) go through Arrow, so no maintenance
 step starts a Python worker.
 
-Maintained beside the table: stats sketch + manifest, value / JSON-field
-/ composite / posting indexes, IVF-PQ and HNSW vector indexes,
-text-feature and near-dup companions, join and aggregate projections,
-the cohort matrix, the continuous-aggregate rollups, and the text index
-and vocab.
+Maintained beside the table: every sidecar kind of sidecars.KINDS.
 
 Scale posture: distributed batches stay plain DataFrame jobs (no
 driver loops); state for windowed aggs is bounded by the watermark; the
@@ -59,13 +55,11 @@ from pyspark.sql import functions as F
 
 from columnar_spark.functions import money
 from columnar_spark.localrel import local_relation, local_row_count
-from columnar_spark.stats import (
-    build_stats_sketch,
-    manifest_from_sketch,
-    merge_sketches,
-    sketch_path,
-)
-from columnar_spark.writer import ROWS_PER_SPLIT, WriteSpec, normalize, stats_path
+from columnar_spark.sidecars import fold_batch
+# merge_sketches: the stats fold (sidecars._fold_stats) calls it through
+# this module, where the append trace wraps it
+from columnar_spark.stats import merge_sketches, table_signature  # noqa: F401
+from columnar_spark.writer import ROWS_PER_SPLIT, WriteSpec, normalize
 
 
 def ingest_ledger_path(dst_path: str) -> str:
@@ -268,143 +262,6 @@ def idempotent_append(
     return moved
 
 
-def _rebuild_sidecars(ss: SparkSession, dst_path: str) -> None:
-    """Crash recovery: a previous attempt died mid-application, so the
-    incremental merges cannot know which sidecars already absorbed the
-    batch. Rebuild every count-derived sidecar from the (now idempotent-
-    appended) table — O(table) once, the same bootstrap paths first-time
-    ingest uses. The text/vocab sidecars are NOT rebuilt: their own
-    applied-batch staging makes the incremental call retry-exact."""
-    from columnar_spark.operators.knn_index import (
-        build_vector_index,
-        load_vector_index,
-    )
-    from columnar_spark.stats import (
-        json_index_meta,
-        persisted_posting_index_cols,
-        persisted_value_index_cols,
-        posting_index_id_col,
-        write_json_field_index,
-        write_posting_index,
-        write_value_index,
-    )
-
-    full = ss.read.parquet(dst_path)
-    sdf = local_relation(ss, build_stats_sketch(full))
-    sdf.coalesce(1).write.mode("overwrite").parquet(sketch_path(dst_path))
-    from columnar_spark.stats import write_stats_sidecar
-
-    write_stats_sidecar(ss, manifest_from_sketch(sdf).coalesce(1), dst_path)
-    for c in persisted_value_index_cols(dst_path):
-        jm = json_index_meta(dst_path, c)
-        if jm is not None:
-            write_json_field_index(ss, dst_path, jm["parent"], jm["json_path"])
-        else:
-            from columnar_spark.stats import (
-                composite_index_cols,
-                value_index_measures,
-            )
-
-            ms = value_index_measures(dst_path, c)
-            cm = composite_index_cols(dst_path, c)
-            write_value_index(
-                ss, dst_path, tuple(cm) if cm else c,
-                measures=[(mc, int(dp)) for mc, dp in ms] if ms else None,
-            )
-    for c in persisted_posting_index_cols(dst_path):
-        idc = posting_index_id_col(dst_path, c)
-        if idc:
-            write_posting_index(ss, dst_path, c, idc)
-    from columnar_spark.operators.knn_index import (
-        _load_vector_index_dir,
-        vector_index_dirs,
-    )
-
-    for vdir in vector_index_dirs(dst_path):
-        vidx = _load_vector_index_dir(dst_path, vdir, check_fresh=False)
-        if vidx is not None and vidx.vec_col in full.columns:
-            store_vectors = "vec" in ss.read.parquet(vidx.vectors_path).columns
-            build_vector_index(
-                ss, full, dst_path,
-                vec_col=vidx.vec_col, id_col=vidx.id_col, metric=vidx.metric,
-                nlist=vidx.nlist, m=vidx.m, k=vidx.k,
-                store_vectors=store_vectors, index_path=vdir,
-            )
-    from columnar_spark.textstats import textstats_meta, write_textstats_sidecar
-
-    tsm = textstats_meta(dst_path)
-    if tsm is not None and tsm["text_col"] in full.columns:
-        # feature rows are row-local, so a full rebuild from the
-        # idempotent-appended table is exact (cannot-double-count recovery)
-        write_textstats_sidecar(ss, dst_path, tsm["id_col"], tsm["text_col"])
-    from columnar_spark.dedupsig import dedupsig_meta, write_dedupsig_sidecar
-
-    dsm = dedupsig_meta(dst_path)
-    if dsm is not None and dsm["text_col"] in full.columns:
-        write_dedupsig_sidecar(
-            ss, dst_path, dsm["id_col"], dsm["text_col"],
-            num_hashes=dsm["num_hashes"], shingle_k=dsm["shingle_k"],
-        )
-    # Join projections touching this table (either side): the crashed
-    # attempt may or may not have appended its delta — rebuild from the
-    # idempotent-appended base tables (cannot-double-count recovery).
-    from columnar_spark.projections import (
-        projections_on,
-        projections_referencing_dim,
-        rebuild_projection,
-    )
-
-    for pname in projections_on(dst_path):
-        rebuild_projection(ss, dst_path, pname)
-    for fpath, pname in projections_referencing_dim(dst_path):
-        rebuild_projection(ss, fpath, pname)
-    # Aggregate projections: same cannot-double-count recovery.
-    from columnar_spark.aggprojections import (
-        agg_projections_on,
-        agg_projections_referencing,
-        rebuild_agg_projection,
-    )
-
-    for pname in agg_projections_on(dst_path):
-        rebuild_agg_projection(ss, dst_path, pname)
-    for fpath, pname in agg_projections_referencing(dst_path):
-        rebuild_agg_projection(ss, fpath, pname)
-    from columnar_spark.operators.cohort import cohort_meta, write_cohort_sidecar
-
-    cm = cohort_meta(dst_path)
-    if cm is not None:
-        write_cohort_sidecar(ss, dst_path, cm["ts_col"], cm["user_col"])
-    from columnar_spark.streaming.rollup import rebuild_rollup_sidecars
-
-    rebuild_rollup_sidecars(full, dst_path)
-    from columnar_spark.operators.hnsw_index import (
-        build_graph_index,
-        graph_index_dirs,
-        load_graph_index_meta,
-    )
-
-    for gdir in graph_index_dirs(dst_path):
-        gmeta = load_graph_index_meta(dst_path, check_fresh=False, index_path=gdir)
-        if gmeta is not None and gmeta["vec_col"] in full.columns:
-            # a crashed attempt may have extended SOME parts: rebuild the
-            # graph from the table (the cannot-double-count recovery, same
-            # as every count-derived sidecar), preserving the artifact's
-            # quantization ladder and trained bounds
-            build_graph_index(
-                ss, full, dst_path,
-                vec_col=gmeta["vec_col"], id_col=gmeta["id_col"],
-                metric=gmeta["metric"], M=gmeta["m"],
-                ef_construction=gmeta["ef_construction"],
-                num_parts=gmeta["num_parts"], seed=gmeta["seed"],
-                quantize=gmeta["quantize"], index_path=gdir,
-                q8_bounds=(
-                    (gmeta["q8_lo"], gmeta["q8_hi"])
-                    if gmeta["q8_lo"] is not None
-                    else None
-                ),
-            )
-
-
 def append_batch(
     batch_df: DataFrame,
     dst_path: str,
@@ -412,13 +269,11 @@ def append_batch(
     batch_id: int | None = None,
 ) -> bool:
     """Append one batch to a table with full sidecar maintenance: the
-    normalized rows land in the table, the stats sketch/manifest merge
-    in the batch's contribution (O(batch), mergeable HLL + associative
-    min/max/counts), and every other sidecar the table carries folds the
-    batch in — value/JSON-field/posting indexes, vector indexes (codes
-    append with the existing centroids/codebooks, no retrain), text
-    companions, projections, the cohort matrix and every
-    `<table>.rollup[-<name>]` continuous aggregate. One contract shared
+    normalized rows land in the table, then every sidecar the table
+    carries folds the batch in (sidecars.fold_batch) — the stats sketch
+    merges the batch's contribution (O(batch), mergeable HLL +
+    associative min/max/counts), vector indexes append codes under the
+    existing centroids/codebooks, and so on. One contract shared
     by batch CLI appends, Engine.sql INSERT and the streaming
     foreachBatch sink, mirroring the reference's storage-plus-sidecars
     rebuild unit (secondary.cpp:391-434, E9).
@@ -475,10 +330,8 @@ def append_batch(
         # artifact's recorded signature so an out-of-band rewrite
         # between ingest events triggers a rebuild instead of being
         # masked by the fold's post-append re-stamp.
-        from columnar_spark.stats import table_signature as _tsig
-
         try:
-            pre_sig = _tsig(dst_path) if os.path.exists(dst_path) else None
+            pre_sig = table_signature(dst_path) if os.path.exists(dst_path) else None
         except Exception:
             pre_sig = None
 
@@ -520,201 +373,11 @@ def append_batch(
             else:
                 appended = ss.read.parquet(*moved)
 
-        if crashed:
-            _rebuild_sidecars(ss, dst_path)
-        elif appended is not None:
-            sp = sketch_path(dst_path)
-            if os.path.isdir(sp):
-                merged = merge_sketches(ss.read.parquet(sp), build_stats_sketch(appended))
-            else:
-                # first sidecar for this table: the table may have pre-existing
-                # rows the batch sketch wouldn't cover — bootstrap from the full
-                # post-append table (one-time O(table); every later append merges
-                # O(batch)). For a brand-new table this reads exactly the batch.
-                merged = build_stats_sketch(ss.read.parquet(dst_path))
-            # materialize before overwriting the path the plan reads from
-            merged_df = local_relation(ss, merged)  # n_columns tiny rows
-            merged_df.coalesce(1).write.mode("overwrite").parquet(sp)
-            from columnar_spark.stats import write_stats_sidecar
-
-            write_stats_sidecar(
-                ss, manifest_from_sketch(merged_df).coalesce(1), dst_path
-            )
-            # Same contract for the vector sidecar: encode the batch with the
-            # EXISTING centroids/codebooks and append its codes — rebuild
-            # happens at compaction, like the reference's segment rebuilds.
-            from columnar_spark.operators.knn_index import (
-                _load_vector_index_dir,
-                append_to_vector_index,
-                vector_index_dirs,
-            )
-
-            # check_fresh=False: the table append above legitimately moved the
-            # signature ahead of the sidecar's recorded one. Every
-            # per-attribute artifact (root + col=*) absorbs the batch.
-            for vdir in vector_index_dirs(dst_path):
-                vidx = _load_vector_index_dir(dst_path, vdir, check_fresh=False)
-                if vidx is not None and vidx.vec_col in appended.columns:
-                    append_to_vector_index(
-                        ss, appended, dst_path, vec_col=vidx.vec_col
-                    )
-            # ... and the HNSW graph sidecars: touched sub-graphs extend
-            # with deterministic level sampling (replay-safe); untouched
-            # parts are not read or written.
-            from columnar_spark.operators.hnsw_index import (
-                append_to_graph_index,
-                graph_index_dirs,
-                load_graph_index_meta,
-            )
-
-            for gdir in graph_index_dirs(dst_path):
-                gmeta = load_graph_index_meta(
-                    dst_path, check_fresh=False, index_path=gdir
-                )
-                if gmeta is not None and gmeta["vec_col"] in appended.columns:
-                    append_to_graph_index(ss, appended, dst_path, index_path=gdir)
-            # Persisted value-index sidecars (A11 artifact): fold the batch's
-            # value counts in — O(index + batch-ndv), same merge contract.
-            from columnar_spark.stats import (
-                composite_index_cols,
-                json_index_meta,
-                merge_posting_index,
-                merge_value_index,
-                persisted_posting_index_cols,
-                persisted_value_index_cols,
-                posting_index_id_col,
-            )
-
-            for c in persisted_value_index_cols(dst_path):
-                jmeta = json_index_meta(dst_path, c)
-                cmeta = composite_index_cols(dst_path, c)
-                if (
-                    c in appended.columns
-                    or (jmeta is not None and jmeta["parent"] in appended.columns)
-                    or (
-                        cmeta is not None
-                        and all(x in appended.columns for x in cmeta)
-                    )
-                ):
-                    # JSON field / composite indexes merge from their
-                    # source columns (the virtual key is computed inside
-                    # merge_value_index)
-                    merge_value_index(ss, dst_path, c, appended)
-            for c in persisted_posting_index_cols(dst_path):
-                idc = posting_index_id_col(dst_path, c)
-                if c in appended.columns and idc and idc in appended.columns:
-                    merge_posting_index(ss, dst_path, c, appended, idc)
-            # Text-feature companion: features are row-local, so the
-            # batch's rows append directly — O(batch), no re-scan.
-            from columnar_spark.textstats import merge_textstats, textstats_meta
-
-            tsm = textstats_meta(dst_path)
-            if (
-                tsm is not None
-                and tsm["text_col"] in appended.columns
-                and tsm["id_col"] in appended.columns
-            ):
-                merge_textstats(ss, dst_path, appended)
-            # Near-dup signature companion: row-local, O(batch) append.
-            from columnar_spark.dedupsig import dedupsig_meta, merge_dedupsig
-
-            dsm = dedupsig_meta(dst_path)
-            if (
-                dsm is not None
-                and dsm["text_col"] in appended.columns
-                and dsm["id_col"] in appended.columns
-            ):
-                merge_dedupsig(ss, dst_path, appended)
-            # Join projections: this table may be the FACT side (its
-            # delta joins the current dim) or the DIM side of a sibling's
-            # projection (the sibling fact joins this delta). Serial
-            # application under the writer lock makes the two increments
-            # sum to exactly Δ(F⋈D) — projections.py delta algebra.
-            from columnar_spark.projections import (
-                merge_projection_dim_delta,
-                merge_projection_fact_delta,
-                projection_meta,
-                projections_on,
-                projections_referencing_dim,
-            )
-
-            for pname in projections_on(dst_path):
-                pm = projection_meta(dst_path, pname)
-                if pm and pm["fact_key"] in appended.columns:
-                    merge_projection_fact_delta(ss, dst_path, pname, appended,
-                                                pre_sig=pre_sig)
-            for fpath, pname in projections_referencing_dim(dst_path):
-                pm = projection_meta(fpath, pname)
-                if pm and pm["dim_key"] in appended.columns:
-                    merge_projection_dim_delta(ss, fpath, pname, appended,
-                                               pre_sig=pre_sig)
-            # Aggregate projections: same two-direction delta algebra —
-            # this table may be the SOURCE (batch partials append) or an
-            # ENRICHMENT dim of a sibling's aggregate (source ⋈ Δdim
-            # partials append). aggprojections.py.
-            import os as _os
-
-            from columnar_spark.aggprojections import (
-                agg_projections_on,
-                agg_projections_referencing,
-                merge_agg_enrich_delta,
-                merge_agg_fact_delta,
-            )
-
-            from columnar_spark.aggprojections import (
-                agg_projection_path,
-                compact_agg_projection,
-            )
-
-            for pname in agg_projections_on(dst_path):
-                merge_agg_fact_delta(ss, dst_path, pname, appended,
-                                     pre_sig=pre_sig)
-                # bounded fragmentation: many micro-batches accumulate a
-                # partial file per append and reads pay a merge groupBy —
-                # fold back to one row per group once the file count says
-                # the merge is no longer cheap (same self-maintenance the
-                # text index's delta folding does at OPTIMIZE, but inline
-                # because agg partials are tiny)
-                pdir = agg_projection_path(dst_path, pname)
-                if len([f for f in _os.listdir(pdir)
-                        if f.endswith(".parquet")]) > 64:
-                    compact_agg_projection(ss, dst_path, pname)
-            _rel = _os.path.basename(dst_path.rstrip("/"))
-            for fpath, pname in agg_projections_referencing(dst_path):
-                merge_agg_enrich_delta(ss, fpath, pname, _rel, appended,
-                                       pre_sig=pre_sig)
-            # Cohort matrix sidecar: correction-partial fold (the one
-            # aggregate the rollup algebra cannot maintain).
-            from columnar_spark.operators.cohort import (
-                append_cohort_batch,
-                cohort_meta,
-            )
-
-            if cohort_meta(dst_path) is not None:
-                append_cohort_batch(ss, dst_path, appended, pre_sig=pre_sig)
-            # Continuous-aggregate rollups (<table>.rollup[-<name>]): the
-            # batch's partials append, so the rollup router keeps serving.
-            from columnar_spark.streaming.rollup import append_rollup_sidecars
-
-            append_rollup_sidecars(appended, dst_path, batch_id=batch_id)
-
-        # Inverted-text + vocab sidecars: their own applied-batch staging
-        # makes these calls retry-exact under BOTH the incremental and the
-        # crash-recovery path — already-committed appends skip themselves.
-        if appended is not None:
-            from columnar_spark.operators.fulltext import (
-                append_to_text_index,
-                load_text_index,
-            )
-
-            loaded = load_text_index(ss, dst_path)
-            if loaded is not None and loaded[2]["text_col"] in appended.columns:
-                append_to_text_index(ss, dst_path, appended, batch_id=batch_id)
-            from columnar_spark.streaming.vocab import append_vocab_delta, vocab_meta
-
-            vm = vocab_meta(dst_path)
-            if vm is not None and vm["text_col"] in appended.columns:
-                append_vocab_delta(ss, dst_path, appended, batch_id=batch_id)
+        # every sidecar kind folds the batch in, or — after a crashed
+        # attempt — rebuilds from the table (sidecars.fold_batch)
+        fold_batch(
+            ss, dst_path, appended, batch_id=batch_id, pre_sig=pre_sig, crashed=crashed
+        )
 
         if batch_id is not None:
             ledger["applied_batches"][str(batch_id)] = "applied"

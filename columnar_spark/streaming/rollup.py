@@ -318,7 +318,9 @@ def ts_as_timestamp(df: DataFrame, ts_col: str) -> DataFrame:
     return df
 
 
-def _rebuild_rollup(table: DataFrame, table_path: str, name, meta: dict) -> None:
+def rebuild_rollup_sidecar(table: DataFrame, table_path: str, name, meta: dict) -> None:
+    """Rebuild the rollup sidecar `name` (meta.json `meta`) from `table`,
+    the current contents of `table_path`."""
     write_rollup_sidecar(
         ts_as_timestamp(table, meta["ts_col"]),
         table_path, meta["ts_col"], meta["bucket"], meta["keys"],
@@ -326,43 +328,28 @@ def _rebuild_rollup(table: DataFrame, table_path: str, name, meta: dict) -> None
     )
 
 
-def append_rollup_sidecars(
-    batch_df: DataFrame, table_path: str, batch_id: int | None = None
+def fold_rollup_sidecar(
+    batch_df: DataFrame, table_path: str, name, meta: dict, batch_id: int | None = None
 ) -> None:
-    """Fold one appended batch into every rollup sidecar of the table
-    (append_batch's maintenance step; run AFTER the table append, so the
-    re-recorded signature matches). Each sidecar's meta.json names what
-    it aggregates. A sidecar with a legacy sum encoding is rebuilt from
-    the table instead — its partials cannot take int64 rows."""
+    """Fold one appended batch into the rollup sidecar `name` (run AFTER
+    the table append, so the re-recorded signature matches). A sidecar
+    with a legacy sum encoding is rebuilt from the table instead — its
+    partials cannot take int64 rows."""
     import os
 
-    spark = batch_df.sparkSession
-    for name, meta in rollup_sidecars(table_path):
-        if meta["ts_col"] not in batch_df.columns:
-            continue
-        if meta.get("sum_encoding") != SUM_ENCODING:
-            _rebuild_rollup(spark.read.parquet(table_path), table_path, name, meta)
-            continue
-        append_rollup_batch(
-            ts_as_timestamp(batch_df, meta["ts_col"]),
-            os.path.join(rollup_sidecar_path(table_path, name), "partials"),
-            meta["ts_col"], meta["bucket"], meta["keys"], meta["value_col"],
-            batch_id=batch_id,
+    if meta["ts_col"] not in batch_df.columns:
+        return
+    if meta.get("sum_encoding") != SUM_ENCODING:
+        rebuild_rollup_sidecar(
+            batch_df.sparkSession.read.parquet(table_path), table_path, name, meta
         )
-
-
-def rebuild_rollup_sidecars(table: DataFrame, table_path: str) -> None:
-    """Rebuild every rollup sidecar from `table`, the current contents
-    of `table_path` (DML refresh, ingest crash recovery). One that fails
-    to rebuild is removed (disable-on-update), so none serves stale
-    partials."""
-    import shutil
-
-    for name, meta in rollup_sidecars(table_path):
-        try:
-            _rebuild_rollup(table, table_path, name, meta)
-        except Exception:
-            shutil.rmtree(rollup_sidecar_path(table_path, name), ignore_errors=True)
+        return
+    append_rollup_batch(
+        ts_as_timestamp(batch_df, meta["ts_col"]),
+        os.path.join(rollup_sidecar_path(table_path, name), "partials"),
+        meta["ts_col"], meta["bucket"], meta["keys"], meta["value_col"],
+        batch_id=batch_id,
+    )
 
 
 def load_rollup_sidecar(spark: SparkSession, table_path: str, name: str | None = None):

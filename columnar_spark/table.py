@@ -619,13 +619,21 @@ class Engine:
         and the cached stats manifest counts the old rows (the rollup
         route's freshness gate compares against it). A registered temp
         view pins the old listing the same way, so re-register it from
-        the fresh directory."""
+        the fresh directory, or drop it once the directory is gone
+        (DROP TABLE)."""
+        import os
+
         self._tables.pop(name, None)
         self._manifests.pop(name, None)
         for key in [k for k in self._value_indexes if k[0] == name]:
             self._value_indexes.pop(key, None)
         if name in self._views:
-            self.table(name).createOrReplaceTempView(name)
+            path = table_path(self.sf_dir, name)
+            if "://" in path or os.path.exists(path):
+                self.table(name).createOrReplaceTempView(name)
+            else:
+                self.spark.catalog.dropTempView(name)
+                self._views.discard(name)
 
     # --------------------------------------------------------------- scan
 

@@ -108,7 +108,7 @@ def write_textstats_sidecar(
     text_col: str = "text",
 ) -> None:
     """Full (re)build: scan the base table once, write the feature rows.
-    Used by first-time ingest and by crash recovery (_rebuild_sidecars) —
+    Used by first-time ingest, crash recovery and DML (sidecars.py) —
     incremental appends go through merge_textstats."""
     from columnar_spark import objstore
     from columnar_spark.functions.layout import ensure_parallelism

@@ -183,13 +183,12 @@ def write_table(df: DataFrame, path: str, spec: WriteSpec | None = None) -> None
         w = w.partitionBy(*spec.partition_by)
     getattr(w, spec.format)(path)
     # An overwrite invalidates every derived artifact. Remove the sidecars
-    # this write does not regenerate (value/posting/text/vector/rollup/
-    # vocab/ingest-ledger) so no reader — in particular the Catalyst
-    # count-rewrite rule — can serve counts for the PREVIOUS table
-    # contents (the reference likewise drops secondary artifacts on any
-    # segment rewrite, secondary.cpp:391-434). `.versions` snapshots are
-    # deliberately kept: they describe named historical states, not the
-    # current one.
+    # (every sidecars.KINDS directory and the ingest ledger) so no reader
+    # — in particular the Catalyst count-rewrite rule — can serve counts
+    # for the PREVIOUS table contents (the reference likewise drops
+    # secondary artifacts on any segment rewrite, secondary.cpp:391-434).
+    # `.versions` snapshots are deliberately kept: they describe named
+    # historical states, not the current one.
     drop_stale_sidecars(path)
     # Stats manifest sidecar — the D1-D5/E7 surface for the planner.
     manifest = build_stats_manifest(getattr(df.sparkSession.read, spec.format)(path))
@@ -206,36 +205,22 @@ def write_table(df: DataFrame, path: str, spec: WriteSpec | None = None) -> None
             )
 
 
-#: every sidecar suffix derived from table CONTENT (all are stale after an
-#: overwrite); `.stats` is re-derived by write_table itself right after.
-SIDECAR_SUFFIXES = (
-    ".stats",
-    ".stats_sketch",
-    ".vidx",
-    ".pidx",
-    ".ftidx",
-    ".knn",
-    ".knn-graph",
-    ".rollup",
-    ".cohort",
-    ".vocab",
-    ".ingest",
-)
-
-
 def drop_stale_sidecars(path: str) -> list[str]:
-    """Remove all content-derived sidecar artifacts of `path`. Returns the
-    suffixes removed. Called by write_table after an overwrite; also the
-    manual escape hatch after any out-of-band table rewrite."""
+    """Remove all content-derived sidecar artifacts of `path` — every
+    directory a kind of sidecars.KINDS claims, and the ingest ledger.
+    Returns the suffixes removed. Called by write_table after an
+    overwrite (which re-derives `.stats` right after); also the manual
+    escape hatch after any out-of-band table rewrite."""
     import shutil
 
-    removed = []
+    from columnar_spark.sidecars import claimed_dirs
+
     base = path.rstrip("/")
-    for suf in SIDECAR_SUFFIXES:
-        p = base + suf
+    removed = []
+    for p in claimed_dirs(base) + [base + ".ingest"]:
         if os.path.isdir(p):
             shutil.rmtree(p)
-            removed.append(suf)
+            removed.append(p[len(base):])
     return removed
 
 
@@ -994,54 +979,12 @@ def compact_table(
     )
     compact_vector_index(spark, path)
     # Compaction changes the table dir's file signature without changing
-    # its CONTENTS, so persisted value-index counts stay exact — but the
-    # freshness gate compares signatures, and a stale recorded signature
-    # would refuse the index forever. Re-record, don't rebuild.
-    from columnar_spark.stats import (
-        _write_table_sig,
-        persisted_posting_index_cols,
-        persisted_value_index_cols,
-        posting_index_path,
-        value_index_path,
-    )
+    # its CONTENTS, so every sidecar stays exact — but the freshness
+    # gates compare signatures, and a stale recorded one would refuse
+    # the artifact forever. Re-record, don't rebuild.
+    from columnar_spark.sidecars import restamp
 
-    for c in persisted_value_index_cols(path):
-        _write_table_sig(path, value_index_path(path, c))
-    for c in persisted_posting_index_cols(path):
-        _write_table_sig(path, posting_index_path(path, c))
-    for side in (
-        path.rstrip("/") + ".textstats",
-        path.rstrip("/") + ".dedupsig",
-    ):
-        if os.path.isdir(side):
-            _write_table_sig(path, side)
-    # per-attribute KNN artifacts each carry their OWN signature file
-    from columnar_spark.operators.hnsw_index import graph_index_dirs
-    from columnar_spark.operators.knn_index import vector_index_dirs
-
-    for side in vector_index_dirs(path) + graph_index_dirs(path):
-        _write_table_sig(path, side)
-    # Join projections record BOTH constituents' signatures: re-record
-    # every projection this table participates in (fact or dim side) —
-    # compaction preserved row content, so the stored join is still
-    # exact and must not be refused forever on a signature mismatch.
-    from columnar_spark.projections import (
-        _dim_abspath,
-        _write_sigs,
-        projection_meta,
-        projection_path,
-        projections_on,
-        projections_referencing_dim,
-    )
-
-    for pname in projections_on(path):
-        pm = projection_meta(path, pname)
-        if pm is not None:
-            _write_sigs(path, _dim_abspath(path, pm), projection_path(path, pname))
-    for fpath, pname in projections_referencing_dim(path):
-        pm = projection_meta(fpath, pname)
-        if pm is not None:
-            _write_sigs(fpath, _dim_abspath(fpath, pm), projection_path(fpath, pname))
+    restamp(path)
     return files_before, files_after
 
 

@@ -2,6 +2,7 @@
 right counts, clean docs survive, and the join is broadcast (the corpus
 side must never shuffle its exploded grams)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from columnar_spark.operators.decontaminate import (
@@ -119,14 +120,20 @@ def test_semantic_eval_set_guard_fires(spark):
         semantic_contamination_report(corpus, big_eval)
 
 
-def test_semantic_kernel_matches_fold_reference(spark):
+@pytest.mark.parametrize("ragged_bench", [False, True])
+@pytest.mark.parametrize("kernel_bytes", ["0", str(1 << 62)])
+def test_semantic_kernel_matches_fold_reference(spark, kernel_bytes, ragged_bench):
     """The Arrow/numpy semantic kernel must be BIT-identical to the
     Catalyst fold it replaced — same left-to-right accumulation order —
     including the edge paths: ragged dims (fold over unequal lengths is
-    NULL -> pair excluded), NULL vectors, duplicate corpus ids (merged
-    by the final groupBy), and zero-hit corpora."""
+    NULL -> pair excluded), NULL vectors, zero-norm vectors (0/0: no
+    hit), duplicate corpus ids (merged by the final groupBy), and
+    zero-hit corpora. Both plans run: the kernel (threshold 0) and the
+    small-corpus expression plan (a threshold no input reaches); a
+    ragged bench set sends the kernel through its per-pair fallback."""
     from columnar_spark.functions.vector import dot, norm
     from columnar_spark.operators.decontaminate import (
+        KERNEL_BYTES_CONF,
         semantic_contamination_report,
     )
 
@@ -138,23 +145,32 @@ def test_semantic_kernel_matches_fold_reference(spark):
     rng = random.Random(7)
     d = 16
     corpus_rows = [(i, [rng.uniform(-1, 1) for _ in range(d)]) for i in range(40)]
-    # adversarial rows: ragged dim, null vector, duplicate id
+    # adversarial rows: ragged dim, null vector, zero vector, duplicate id
     corpus_rows += [
         (100, [1.0] * (d - 3)),          # ragged: never matches (NULL sim)
         (101, None),                      # null vector: excluded
+        (102, [0.0] * d),                 # zero norm: never matches
         (0, list(corpus_rows[0][1])),     # duplicate id: n_hits merges
     ]
     bench_rows = [(i, corpus_rows[i][1]) for i in range(0, 6)]
+    bench_rows += [(50, [0.0] * d)]       # zero-norm bench vector
+    if ragged_bench:
+        bench_rows += [(51, [1.0] * (d - 3))]
     corpus, bench = mk(corpus_rows), mk(bench_rows)
 
-    got = {
-        tuple(r)
-        for r in semantic_contamination_report(
-            corpus, bench, threshold=0.3
-        ).collect()
-    }
+    spark.conf.set(KERNEL_BYTES_CONF, kernel_bytes)
+    try:
+        got = {
+            tuple(r)
+            for r in semantic_contamination_report(
+                corpus, bench, threshold=0.3
+            ).collect()
+        }
+    finally:
+        spark.conf.unset(KERNEL_BYTES_CONF)
 
-    # fold-based reference (the pre-optimization definition, verbatim)
+    # fold-based reference (the pre-optimization definition, with the
+    # zero-norm pair scored NULL)
     b_ref = F.broadcast(
         bench.select(F.col("embedding").cast("array<double>").alias("__bv"))
         .withColumn("__bn", norm(F.col("__bv")))
@@ -162,7 +178,8 @@ def test_semantic_kernel_matches_fold_reference(spark):
     c_ref = corpus.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("__cv")
     ).withColumn("__cn", norm(F.col("__cv")))
-    sim = dot(F.col("__cv"), F.col("__bv")) / (F.col("__cn") * F.col("__bn"))
+    den = F.col("__cn") * F.col("__bn")
+    sim = F.when(den != 0, dot(F.col("__cv"), F.col("__bv")) / den)
     want = {
         tuple(r)
         for r in c_ref.crossJoin(b_ref)
@@ -176,6 +193,8 @@ def test_semantic_kernel_matches_fold_reference(spark):
         .collect()
     }
     assert got == want and len(got) > 0
+    if ragged_bench:
+        assert (100, 1, 1.0) in got  # the ragged pair of equal length
 
 
 def test_semantic_kernel_empty_eval_set(spark):

@@ -277,12 +277,12 @@ def test_compaction_rerecords_per_attribute_sigs(spark, tmp_path_factory):
 
 
 def test_crash_rebuild_preserves_quantization_and_all_artifacts(spark, tmp_path_factory):
-    """_rebuild_sidecars (the crashed-mid-application recovery) must
+    """sidecars.rebuild (the crashed-mid-application recovery) must
     rebuild EVERY per-attribute artifact and preserve each graph's
     quantization ladder + frozen bounds (a raw-float rebuild of a q8
     artifact would silently quadruple it and break the oracle's
     code-space construction)."""
-    from columnar_spark.streaming.ingest import _rebuild_sidecars
+    from columnar_spark.sidecars import rebuild
 
     path = str(tmp_path_factory.mktemp("crashmulti") / "t.parquet")
     df = spark.createDataFrame(
@@ -305,7 +305,7 @@ def test_crash_rebuild_preserves_quantization_and_all_artifacts(spark, tmp_path_
         "vec_id: long, text_emb: array<float>, img_emb: array<float>",
     )
     batch.write.mode("append").parquet(path)
-    _rebuild_sidecars(spark, path)
+    rebuild(spark, path)
 
     m1 = load_graph_index_meta(path, vec_col="text_emb")
     assert m1["quantize"] == "q8" and (m1["q8_lo"], m1["q8_hi"]) == bounds0

@@ -330,7 +330,7 @@ def test_ledgered_replay_is_noop_for_companions(spark, layout):
 
 
 def test_crash_recovery_rebuilds_new_companions(spark, layout, tmp_path):
-    """A crashed in-flight marker forces _rebuild_sidecars: the
+    """A crashed in-flight marker forces the sidecar rebuild: the
     projection (fact side) and a textstats/dedupsig companion on a
     sibling documents table must converge to exactly the one-shot state
     after the retry — no double-applied deltas."""

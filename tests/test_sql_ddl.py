@@ -47,10 +47,12 @@ def test_truncate_keeps_schema_drops_rows(spark, tmp_path):
 def test_drop_table_removes_data_and_every_sidecar(spark, tmp_path):
     eng, p = _mk(spark, tmp_path)
     write_value_index(spark, p, "c")
-    os.makedirs(p + ".ftidx", exist_ok=True)
+    extra = (".ftidx", ".textstats", ".dedupsig", ".proj", ".aggproj", ".rollup-named")
+    for suffix in extra:
+        os.makedirs(p + suffix, exist_ok=True)
     row = eng.sql("DROP TABLE t").first()
     assert row.op == "drop_table" and row.n_affected == 1
-    for suffix in ("", ".stats", ".vidx", ".ftidx"):
+    for suffix in ("", ".stats", ".vidx") + extra:
         assert not os.path.isdir(p + suffix), suffix
     # IF EXISTS on a missing table is a quiet no-op; bare DROP raises
     assert eng.sql("DROP TABLE IF EXISTS t").first().n_affected == 0
