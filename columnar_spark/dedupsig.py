@@ -166,6 +166,27 @@ def load_dedupsig(
     return objstore.read_df(spark, p)
 
 
+def check_dedupsig(spark: SparkSession, table_path: str, fmt: str = "parquet") -> list[str]:
+    """Integrity audit: the stored sketches must equal a live recompute
+    with the recorded parameters, row for row."""
+    meta = dedupsig_meta(table_path)
+    side = load_dedupsig(
+        spark, table_path, meta["num_hashes"], meta["shingle_k"], check_fresh=False
+    )
+    if side is None:
+        return ["dedupsig sidecar: meta present but unreadable"]
+    df = getattr(spark.read, fmt)(table_path)
+    if meta["text_col"] not in df.columns or meta["id_col"] not in df.columns:
+        return []
+    live = signature_frame(
+        df, meta["id_col"], meta["text_col"], meta["num_hashes"], meta["shingle_k"],
+        meta.get("store_shingle_hashes", False),
+    )
+    if side.exceptAll(live).limit(1).count() + live.exceptAll(side).limit(1).count():
+        return ["dedupsig sidecar: rows disagree with live recompute"]
+    return []
+
+
 def merge_dedupsig(spark: SparkSession, table_path: str, appended: DataFrame) -> None:
     """Incremental E9 maintenance — signatures are row-local, so one
     batch's rows append in O(batch)."""

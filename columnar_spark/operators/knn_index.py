@@ -473,6 +473,36 @@ def _check_vector_index_dir(
     return errors
 
 
+def compact_vector_index_dir(spark: SparkSession, table_path: str, index_dir: str) -> bool:
+    """Compact one vector artifact's code dataset: per-batch appends
+    leave one file per (batch, cluster); rewrite to one file per cluster
+    partition, rewrite-then-swap. Codes are NOT retrained — ids,
+    clusters, and pq codes are byte-identical, only the file layout
+    changes. Returns True when a rewrite happened."""
+    import shutil
+
+    # compaction may just have changed the table's file signature
+    index = _load_vector_index_dir(table_path, index_dir, check_fresh=False)
+    if index is None:
+        return False
+    vp = index.vectors_path
+    if len(glob.glob(os.path.join(vp, "ivf_cluster=*", "*.parquet"))) <= index.nlist:
+        return False
+    tmp = vp.rstrip("/") + ".compact.tmp"
+    (
+        spark.read.parquet(vp)
+        .repartition("ivf_cluster")
+        .write.mode("overwrite")
+        .partitionBy("ivf_cluster")
+        .parquet(tmp)
+    )
+    old = vp.rstrip("/") + ".compact.old"
+    shutil.move(vp, old)
+    shutil.move(tmp, vp)
+    shutil.rmtree(old)
+    return True
+
+
 # Driver-side b1 shortlist probe: below this many code rows the hamming
 # candidate scan runs as one pyarrow read + numpy popcount on the driver
 # (cached per artifact signature), collapsing the query to a single

@@ -3,29 +3,43 @@
 A table at `<dir>/<name>.parquet` carries derived artifacts beside it
 (`<name>.parquet.<suffix>`). The reference never maintains them one by
 one: a segment rebuild runs the columnar, secondary-index and KNN
-builders together, whatever the reason for the rebuild. Here each kind
-in KINDS states, delegating to the kind's own writer and merge
+builders together, whatever the reason for the rebuild, and its checker
+(CheckColumnarStorage, columnar/accessor/check.cpp:316-322) sends each
+column type to its own checker from one place. Here each kind in KINDS
+states, delegating to the kind's own writer, merge and checker
 functions:
 
 - `instances(table_path)`: where its artifacts live beside the table
   (one entry per artifact: an indexed column, a vector-index dir, a
-  projection name, ...), and `suffix`, the sibling names it claims;
+  projection name, ...), `artifact(table_path, inst)`: the directory of
+  one, and `suffix`, the sibling names it claims;
 - `fold(m, inst)`: fold an appended batch (`m.batch`) in;
 - `rebuild(m, inst)`: rebuild from the table's current contents, and
-  `remove(path, inst)`: delete the artifact;
+  `remove(path, inst)`: delete the artifact (default: its directory);
 - `dml`: what a row mutation does to it, "rebuild" or "drop" (JSON-field
   indexes are dropped, the reference's disable-on-update);
-- `restamp(path, inst)`: re-record the table signature after a rewrite
-  that kept the rows (compaction).
+- `restamp(path, inst, pre_sig)`: re-record the table signature after a
+  rewrite that kept the rows (compaction), if the artifact matched the
+  table before it (`pre_sig`); default: the artifact's `_table_sig.json`;
+- `check(m, inst)`: the artifact's violations against the table's
+  contents ([] = clean); None for kinds with no content check;
+- `describe(path, inst)`: its SHOW INDEXES column and its SHOW CREATE
+  TABLE clause (None: not declarable in DDL);
+- `compact(m, inst)`: OPTIMIZE's maintenance of the artifact itself
+  (delta folding, file coalescing, a re-clustering rebuild); None: none.
 
-The maintenance flows are loops over that one list:
+Entries that run Spark take the pass's `Maint` (session, table path and
+format); filesystem-only ones the table path. The flows are loops over
+that one list:
 
 - `fold_batch` is streaming/ingest.append_batch's maintenance step. On
   a crashed ledger it rebuilds every kind instead, except the
   `retry_exact` ones (text index, vocab), whose own applied-batch
   staging makes the fold exact under a retry;
 - `reindex` is the DML tail (operators/upsert.reindex_table);
-- `restamp` follows writer.compact_table;
+- `restamp` and `compact` follow writer.compact_table (OPTIMIZE);
+- `check` is writer.check_table's sidecar audit;
+- `inventory` is SHOW INDEXES and SHOW CREATE TABLE (table.py);
 - `claimed_dirs` is the drop list (writer.drop_stale_sidecars).
 
 A rebuild that fails removes its artifact, so nothing serves stale
@@ -46,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from columnar_spark import aggprojections as agp
 from columnar_spark import dedupsig as dsig
+from columnar_spark import objstore
 from columnar_spark import projections as proj
 from columnar_spark import stats
 from columnar_spark import textstats as tstats
@@ -63,7 +78,7 @@ _log = logging.getLogger(__name__)
 @dataclass
 class Maint:
     """One maintenance pass over the table at `path`: an append's fold
-    (`batch` = the committed rows) or a rebuild."""
+    (`batch` = the committed rows), a rebuild, a check or a compaction."""
 
     spark: SparkSession
     path: str
@@ -82,6 +97,10 @@ class Maint:
         return all(c in self.batch.columns for c in cols)
 
 
+# restamp default: re-record the `_table_sig.json` in the artifact dir
+_ARTIFACT_SIG: Any = "artifact"
+
+
 @dataclass(frozen=True)
 class Kind:
     name: str
@@ -89,14 +108,27 @@ class Kind:
     # artifacts live beside ANOTHER table (projection dim/enrich sides)
     suffix: "str | None"
     instances: Callable[[str], list]
+    artifact: Callable[[str, Any], str]
     fold: Callable[[Maint, Any], None]
     rebuild: Callable[[Maint, Any], None]
-    remove: Callable[[str, Any], None]
-    # re-record the table signature after a rewrite that kept the rows;
+    check: "Callable[[Maint, Any], list[str]] | None" = None
+    # (SHOW INDEXES column, SHOW CREATE TABLE clause or None)
+    describe: "Callable[[str, Any], tuple[str, str | None]]" = lambda p, inst: ("—", None)
+    compact: "Callable[[Maint, Any], None] | None" = None
+    remove: "Callable[[str, Any], None] | None" = None
     # None for kinds that carry no signature
-    restamp: "Callable[[str, Any], None] | None" = None
+    restamp: "Callable[[str, Any, dict], None] | None" = _ARTIFACT_SIG
     dml: str = "rebuild"
     retry_exact: bool = False
+
+    def __post_init__(self):
+        art = self.artifact
+        if self.remove is None:
+            object.__setattr__(self, "remove", lambda p, inst: _rmtree(art(p, inst)))
+        if self.restamp is _ARTIFACT_SIG:
+            object.__setattr__(
+                self, "restamp", lambda p, inst, pre: _restamp_sig(p, art(p, inst), pre)
+            )
 
 
 def _rmtree(p: str) -> None:
@@ -122,6 +154,17 @@ def _remove_keeping_col_dirs(d: str) -> None:
                 pass
     if not os.listdir(d):
         _rmtree(d)
+
+
+def _same_sig(rec: "dict | None", sig: dict) -> bool:
+    return rec is not None and all(
+        rec.get(k) == sig.get(k) for k in ("files", "bytes", "max_mtime_ms")
+    )
+
+
+def _restamp_sig(path: str, art: str, pre_sig: dict) -> None:
+    if _same_sig(objstore.read_json(art, "_table_sig.json"), pre_sig):
+        stats._write_table_sig(path, art)
 
 
 # ----------------------------------------------------- stats + sketch
@@ -156,7 +199,7 @@ def _rebuild_stats(m: Maint, _inst) -> None:
 
 
 def _remove_stats(path: str, _inst) -> None:
-    _rmtree(path.rstrip("/") + ".stats")
+    _rmtree(stats.stats_path(path))
     _rmtree(stats.sketch_path(path))
 
 
@@ -183,6 +226,10 @@ def _rebuild_value_index(m: Maint, col: str) -> None:
     )
 
 
+def _describe_value_index(path: str, col: str) -> tuple:
+    return col, f"INDEX ({', '.join(stats.composite_index_cols(path, col) or [col])})"
+
+
 def _json_field_indexes(path: str) -> list:
     return [
         (c, jm) for c in stats.persisted_value_index_cols(path)
@@ -199,6 +246,14 @@ def _fold_json_field_index(m: Maint, inst) -> None:
 def _rebuild_json_field_index(m: Maint, inst) -> None:
     _col, jm = inst
     stats.write_json_field_index(m.spark, m.path, jm["parent"], jm["json_path"], m.fmt)
+
+
+def _describe_json_field_index(_path: str, inst) -> tuple:
+    _col, jm = inst
+    return (
+        f"{jm['parent']}:{jm['json_path']}",
+        f"INDEX (get_json_object({jm['parent']}, '{jm['json_path']}'))",
+    )
 
 
 def _posting_indexes(path: str) -> list:
@@ -221,6 +276,12 @@ def _rebuild_posting_index(m: Maint, inst) -> None:
 
 # ------------------------------------------------- vector + HNSW graph
 
+def _in_dir(d: str, errors: "list[str]") -> "list[str]":
+    """Tag a per-attribute (`col=*`) artifact's violations with its dir."""
+    tag = os.path.basename(d)
+    return [f"{tag}: {e}" for e in errors] if tag.startswith("col=") else errors
+
+
 def _fold_vector_index(m: Maint, vdir: str) -> None:
     vidx = ivf._load_vector_index_dir(m.path, vdir, check_fresh=False)
     if vidx is not None and m.has(vidx.vec_col):
@@ -238,6 +299,16 @@ def _rebuild_vector_index(m: Maint, vdir: str) -> None:
         nlist=vidx.nlist, m=vidx.m, k=vidx.k,
         store_vectors="vec" in m.spark.read.parquet(vidx.vectors_path).columns,
         index_path=vdir,
+    )
+
+
+def _describe_vector_index(path: str, vdir: str) -> tuple:
+    vi = ivf._load_vector_index_dir(path, vdir, check_fresh=False)
+    if vi is None:
+        return "—", None
+    return vi.vec_col, (
+        f"VECTOR INDEX ({vi.vec_col}) "
+        f"WITH (metric='{vi.metric}', nlist={vi.nlist}, m={vi.m})"
     )
 
 
@@ -260,6 +331,11 @@ def _rebuild_graph_index(m: Maint, gdir: str) -> None:
         index_path=gdir,
         q8_bounds=(g["q8_lo"], g["q8_hi"]) if g["q8_lo"] is not None else None,
     )
+
+
+def _describe_graph_index(path: str, gdir: str) -> tuple:
+    gm = hnsw.load_graph_index_meta(path, check_fresh=False, index_path=gdir)
+    return (gm["vec_col"] if gm else "—"), None
 
 
 # ------------------------------------------------------ text companions
@@ -312,6 +388,40 @@ def _rebuild_dedupsig(m: Maint, meta: dict) -> None:
     )
 
 
+def _compact_companion(spark: SparkSession, p: str) -> None:
+    """Coalesce-rewrite a row-local companion sidecar (.textstats /
+    .dedupsig) at `p`, fragmented by per-batch appends: content is
+    row-identical, so the meta and table-signature files carry over
+    unchanged. Rewrite-then-swap like every compaction here."""
+    from columnar_spark.writer import ROWS_PER_SPLIT
+
+    # crash recovery first: a previous compaction that died between its
+    # two renames leaves p missing with p.old intact (answers stayed
+    # correct — loaders fall back to the live path), plus orphan
+    # .old/.compact.tmp dirs no later run would sweep
+    old, tmp = p + ".old", p + ".compact.tmp"
+    if not os.path.isdir(p) and os.path.isdir(old):
+        os.rename(old, p)
+    _rmtree(tmp)
+    if not os.path.isdir(p):
+        return
+    _rmtree(old)
+    files = [f for f in os.listdir(p) if f.endswith(".parquet")]
+    df = spark.read.parquet(p)
+    n = df.count()
+    target = max(1, n // ROWS_PER_SPLIT + (1 if n % ROWS_PER_SPLIT else 0))
+    if len(files) <= max(target, 4):
+        return
+    df.repartition(target).write.mode("overwrite").parquet(tmp)
+    for extra in ("_meta.json", "_table_sig.json"):
+        src = os.path.join(p, extra)
+        if os.path.isfile(src):
+            shutil.copy(src, os.path.join(tmp, extra))
+    os.rename(p, old)
+    os.rename(tmp, p)
+    _rmtree(old)
+
+
 # ------------------------------------------------------------ projections
 # Join and aggregate projections fold from both directions: this table
 # may be the fact/source side (its delta joins the current dims) or a
@@ -332,6 +442,25 @@ def _fold_join_dim(m: Maint, inst) -> None:
         proj.merge_projection_dim_delta(m.spark, fpath, name, m.batch, pre_sig=m.pre_sig)
 
 
+def _compact_join(m: Maint, name: str) -> None:
+    # a fragmented projection gets the full clustered rewrite (rebuild IS
+    # its compaction — re-clusters by the declared key and re-records
+    # both constituent signatures)
+    n_table = len([f for f in os.listdir(m.path) if f.endswith((".parquet", ".orc"))])
+    pdir = proj.projection_path(m.path, name)
+    if len([f for f in os.listdir(pdir) if f.endswith(".parquet")]) > max(4, n_table):
+        proj.rebuild_projection(m.spark, m.path, name)
+
+
+def _restamp_join(fact: str, name: str, pre_sig: dict, changed: str) -> None:
+    pm = proj.projection_meta(fact, name)
+    if pm is None:
+        return
+    dim, pdir = proj._dim_abspath(fact, pm), proj.projection_path(fact, name)
+    if not proj._stale_before_append(fact, dim, pdir, changed, pre_sig):
+        proj._write_sigs(fact, dim, pdir)
+
+
 # many micro-batches leave a partial file per append; past this many an
 # aggregate projection folds back to one row per group inline
 AGGPROJ_COMPACT_FILES = 64
@@ -344,10 +473,23 @@ def _fold_agg_source(m: Maint, name: str) -> None:
         agp.compact_agg_projection(m.spark, m.path, name)
 
 
+def _rel(path: str) -> str:
+    """An enrichment table's name in its projections' metas."""
+    return os.path.basename(path.rstrip("/"))
+
+
 def _fold_agg_enrich(m: Maint, inst) -> None:
     fpath, name = inst
-    rel = os.path.basename(m.path.rstrip("/"))
-    agp.merge_agg_enrich_delta(m.spark, fpath, name, rel, m.batch, pre_sig=m.pre_sig)
+    agp.merge_agg_enrich_delta(m.spark, fpath, name, _rel(m.path), m.batch, pre_sig=m.pre_sig)
+
+
+def _restamp_agg(fact: str, name: str, pre_sig: dict, changed: str) -> None:
+    meta = agp.agg_projection_meta(fact, name)
+    if meta is None:
+        return
+    pdir = agp.agg_projection_path(fact, name)
+    if not agp._stale_before_append(fact, meta, pdir, changed, pre_sig):
+        agp._write_sigs(fact, meta, pdir)
 
 
 # ------------------------------------------------------- cohort, rollup
@@ -370,120 +512,127 @@ def _rebuild_rollup(m: Maint, inst) -> None:
     rollup.rebuild_rollup_sidecar(m.table, m.path, name, meta)
 
 
-def _sig(index_dir: "Callable[..., str]"):
-    """restamp for a kind whose artifact records `_table_sig.json`."""
-    return lambda p, inst: stats._write_table_sig(p, index_dir(p, inst))
-
-
-def _restamp_join(fact: str, name: str) -> None:
-    pm = proj.projection_meta(fact, name)
-    if pm is not None:
-        proj._write_sigs(fact, proj._dim_abspath(fact, pm), proj.projection_path(fact, name))
-
-
-def _restamp_agg(fact: str, name: str) -> None:
-    meta = agp.agg_projection_meta(fact, name)
-    if meta is not None:
-        agp._write_sigs(fact, meta, agp.agg_projection_path(fact, name))
-
-
 KINDS: "tuple[Kind, ...]" = (
     Kind(
         "stats", r"\.stats(?:_sketch)?", lambda p: [None],
-        _fold_stats, _rebuild_stats, _remove_stats,
+        lambda p, _: stats.stats_path(p),
+        _fold_stats, _rebuild_stats,
+        check=lambda m, _: stats.check_stats_manifest(m.spark, m.path, m.fmt),
+        remove=_remove_stats, restamp=None,
     ),
     Kind(
-        "value_index", r"\.vidx", _value_index_cols,
+        "value_index", r"\.vidx", _value_index_cols, stats.value_index_path,
         _fold_value_index, _rebuild_value_index,
-        lambda p, col: _rmtree(stats.value_index_path(p, col)),
-        _sig(stats.value_index_path),
+        check=lambda m, col: stats.check_value_index(m.spark, m.path, col, m.fmt),
+        describe=_describe_value_index,
     ),
     Kind(
         "json_field_index", r"\.vidx", _json_field_indexes,
+        lambda p, inst: stats.value_index_path(p, inst[0]),
         _fold_json_field_index, _rebuild_json_field_index,
-        lambda p, inst: _rmtree(stats.value_index_path(p, inst[0])),
-        _sig(lambda p, inst: stats.value_index_path(p, inst[0])),
+        check=lambda m, inst: stats.check_value_index(m.spark, m.path, inst[0], m.fmt),
+        describe=_describe_json_field_index,
         dml="drop",
     ),
     Kind(
         "posting_index", r"\.pidx", _posting_indexes,
+        lambda p, inst: stats.posting_index_path(p, inst[0]),
         _fold_posting_index, _rebuild_posting_index,
-        lambda p, inst: _rmtree(stats.posting_index_path(p, inst[0])),
-        _sig(lambda p, inst: stats.posting_index_path(p, inst[0])),
+        describe=lambda p, inst: (inst[0], None),
     ),
     Kind(
-        "vector_index", r"\.knn", ivf.vector_index_dirs,
+        "vector_index", r"\.knn", ivf.vector_index_dirs, lambda p, d: d,
         _fold_vector_index, _rebuild_vector_index,
-        lambda p, d: _remove_keeping_col_dirs(d), _sig(lambda p, d: d),
+        check=lambda m, d: _in_dir(d, ivf._check_vector_index_dir(m.spark, m.path, d)),
+        describe=_describe_vector_index,
+        compact=lambda m, d: ivf.compact_vector_index_dir(m.spark, m.path, d),
+        remove=lambda p, d: _remove_keeping_col_dirs(d),
     ),
     Kind(
-        "graph_index", r"\.knn-graph", hnsw.graph_index_dirs,
+        "graph_index", r"\.knn-graph", hnsw.graph_index_dirs, lambda p, d: d,
         _fold_graph_index, _rebuild_graph_index,
-        lambda p, d: _remove_keeping_col_dirs(d), _sig(lambda p, d: d),
+        check=lambda m, d: _in_dir(d, hnsw.check_graph_index(m.spark, m.path, index_path=d)),
+        describe=_describe_graph_index,
+        remove=lambda p, d: _remove_keeping_col_dirs(d),
     ),
     Kind(
         "text_index", r"\.ftidx", lambda p: _one(ft.text_index_meta(p)),
+        lambda p, _: ft.text_index_path(p),
         _fold_text_index, _rebuild_text_index,
-        lambda p, _m: _rmtree(ft.text_index_path(p)),
-        retry_exact=True,
+        check=lambda m, _: ft.check_text_index(m.spark, m.path, m.fmt),
+        describe=lambda p, meta: (
+            "—", f"TEXT INDEX ({meta['text_col']}, {meta.get('id_col', 'doc_id')})"
+        ),
+        compact=lambda m, _: ft.compact_text_index(m.spark, m.path, m.fmt),
+        restamp=None, retry_exact=True,
     ),
     Kind(
         "vocab", r"\.vocab", lambda p: _one(vocab.vocab_meta(p)),
+        lambda p, _: p.rstrip("/") + ".vocab",
         _fold_vocab, _rebuild_vocab,
-        lambda p, _m: _rmtree(p.rstrip("/") + ".vocab"),
-        retry_exact=True,
+        restamp=None, retry_exact=True,
     ),
     Kind(
         "textstats", r"\.textstats", lambda p: _one(tstats.textstats_meta(p)),
+        lambda p, _: tstats.textstats_path(p),
         _fold_textstats, _rebuild_textstats,
-        lambda p, _m: _rmtree(tstats.textstats_path(p)),
-        _sig(lambda p, _m: tstats.textstats_path(p)),
+        check=lambda m, _: tstats.check_textstats(m.spark, m.path, m.fmt),
+        compact=lambda m, _: _compact_companion(m.spark, tstats.textstats_path(m.path)),
     ),
     Kind(
         "dedupsig", r"\.dedupsig", lambda p: _one(dsig.dedupsig_meta(p)),
+        lambda p, _: dsig.dedupsig_path(p),
         _fold_dedupsig, _rebuild_dedupsig,
-        lambda p, _m: _rmtree(dsig.dedupsig_path(p)),
-        _sig(lambda p, _m: dsig.dedupsig_path(p)),
+        check=lambda m, _: dsig.check_dedupsig(m.spark, m.path, m.fmt),
+        compact=lambda m, _: _compact_companion(m.spark, dsig.dedupsig_path(m.path)),
     ),
     Kind(
         "join_projection", re.escape(proj.PROJ_SUFFIX), proj.projections_on,
+        proj.projection_path,
         _fold_join_fact,
         lambda m, name: proj.rebuild_projection(m.spark, m.path, name),
-        lambda p, name: _rmtree(proj.projection_path(p, name)),
-        _restamp_join,
+        check=lambda m, name: proj.check_projection(m.spark, m.path, name),
+        describe=lambda p, name: (name, None),
+        compact=_compact_join,
+        restamp=lambda p, name, pre: _restamp_join(p, name, pre, "fact"),
     ),
     Kind(
         "join_projection_dim", None, proj.projections_referencing_dim,
+        lambda p, inst: proj.projection_path(*inst),
         _fold_join_dim,
         lambda m, inst: proj.rebuild_projection(m.spark, *inst),
-        lambda p, inst: _rmtree(proj.projection_path(*inst)),
-        lambda p, inst: _restamp_join(*inst),
+        restamp=lambda p, inst, pre: _restamp_join(*inst, pre, "dim"),
     ),
     Kind(
-        "agg_projection", re.escape(agp.AGGPROJ_SUFFIX), agp.agg_projections_on,
+        "aggregate_projection", re.escape(agp.AGGPROJ_SUFFIX), agp.agg_projections_on,
+        agp.agg_projection_path,
         _fold_agg_source,
         lambda m, name: agp.rebuild_agg_projection(m.spark, m.path, name),
-        lambda p, name: _rmtree(agp.agg_projection_path(p, name)),
-        _restamp_agg,
+        check=lambda m, name: agp.check_agg_projection(m.spark, m.path, name),
+        describe=lambda p, name: (name, None),
+        # the rebuild re-merges its partials and re-clusters
+        compact=lambda m, name: agp.rebuild_agg_projection(m.spark, m.path, name),
+        restamp=lambda p, name, pre: _restamp_agg(p, name, pre, "__source__"),
     ),
     Kind(
-        "agg_projection_enrich", None, agp.agg_projections_referencing,
+        "aggregate_projection_enrich", None, agp.agg_projections_referencing,
+        lambda p, inst: agp.agg_projection_path(*inst),
         _fold_agg_enrich,
         lambda m, inst: agp.rebuild_agg_projection(m.spark, *inst),
-        lambda p, inst: _rmtree(agp.agg_projection_path(*inst)),
-        lambda p, inst: _restamp_agg(*inst),
+        compact=lambda m, inst: agp.rebuild_agg_projection(m.spark, *inst),
+        restamp=lambda p, inst, pre: _restamp_agg(*inst, pre, _rel(p)),
     ),
     Kind(
         "cohort", re.escape(cohort.COHORT_SUFFIX), lambda p: _one(cohort.cohort_meta(p)),
+        lambda p, _: cohort.cohort_sidecar_path(p),
         _fold_cohort, _rebuild_cohort,
-        lambda p, _m: _rmtree(cohort.cohort_sidecar_path(p)),
-        _sig(lambda p, _m: cohort.cohort_sidecar_path(p)),
+        check=lambda m, _: cohort.check_cohort_sidecar(m.spark, m.path),
     ),
     Kind(
         "rollup", r"\.rollup(?:-[A-Za-z0-9_\-]+)?", rollup.rollup_sidecars,
+        lambda p, inst: rollup.rollup_sidecar_path(p, inst[0]),
         _fold_rollup, _rebuild_rollup,
-        lambda p, inst: _rmtree(rollup.rollup_sidecar_path(p, inst[0])),
-        _sig(lambda p, inst: rollup.rollup_sidecar_path(p, inst[0])),
+        describe=lambda p, inst: (inst[0] or "—", None),
     ),
 )
 
@@ -543,14 +692,56 @@ def reindex(spark: SparkSession, path: str, fmt: str = "parquet") -> None:
     rebuild(spark, path, fmt, [k for k in KINDS if k.dml == "rebuild"])
 
 
-def restamp(path: str) -> None:
+def restamp(path: str, pre_sig: dict) -> None:
     """After a rewrite that kept the table's rows (compaction), re-record
-    the table signature in every artifact that carries one: its content
-    is still exact, and the freshness gates would refuse it otherwise."""
+    the table signature in every artifact that carries one and matched
+    the table before the rewrite (`pre_sig`): its content is still
+    exact, and the freshness gates would refuse it otherwise. An
+    artifact that was already stale stays stale, and refused."""
     for kind in KINDS:
         if kind.restamp is not None:
             for inst in kind.instances(path):
-                kind.restamp(path, inst)
+                kind.restamp(path, inst, pre_sig)
+
+
+def compact(spark: SparkSession, path: str, fmt: str = "parquet") -> None:
+    """Compact every artifact of the table at `path` whose kind has a
+    `compact` step (text-index delta folding, companion coalescing,
+    vector-code coalescing, projection rebuilds)."""
+    m = Maint(spark, path, fmt)
+    with stats.rewrites_disabled(spark):
+        for kind in KINDS:
+            if kind.compact is not None:
+                for inst in kind.instances(path):
+                    kind.compact(m, inst)
+
+
+def check(spark: SparkSession, path: str, fmt: str = "parquet") -> "list[str]":
+    """Every violation any sidecar of the table at `path` shows against
+    the table's contents, with the query rewrites off (an audit answered
+    from the sidecar under audit would be vacuous)."""
+    m = Maint(spark, path, fmt)
+    with stats.rewrites_disabled(spark):
+        return [
+            e for kind in KINDS if kind.check is not None
+            for inst in kind.instances(path) for e in kind.check(m, inst)
+        ]
+
+
+def inventory(path: str) -> "list[tuple[str, str, str, str | None]]":
+    """(kind, column, artifact dir, CREATE TABLE clause or None) of every
+    artifact beside the table at `path`, in registry order: SHOW INDEXES
+    and SHOW CREATE TABLE. Metadata only, no Spark job."""
+    out = []
+    for kind in KINDS:
+        if kind.suffix is None:
+            continue
+        for inst in kind.instances(path):
+            art = kind.artifact(path, inst)
+            if os.path.isdir(art):
+                column, clause = kind.describe(path, inst)
+                out.append((kind.name, column, art, clause))
+    return out
 
 
 _CLAIMED = "(?:" + "|".join(k.suffix for k in KINDS if k.suffix) + ")"

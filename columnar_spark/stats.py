@@ -206,6 +206,10 @@ def stats_can_match(manifest_rows: dict[str, dict], f: Filter) -> bool:
 
 
 
+def stats_path(table_path: str) -> str:
+    return table_path.rstrip("/") + ".stats"
+
+
 def write_stats_sidecar(spark: SparkSession, manifest_df: DataFrame, table_path: str) -> None:
     """Publish the stats manifest beside the table: POSIX overwrite, or
     the staging + atomic manifest-pointer commit on object stores
@@ -213,7 +217,7 @@ def write_stats_sidecar(spark: SparkSession, manifest_df: DataFrame, table_path:
     supports rename-free publication."""
     from columnar_spark import objstore
 
-    p = table_path.rstrip("/") + ".stats"
+    p = stats_path(table_path)
     if objstore.is_object_store(p):
         objstore.write_df(spark, manifest_df, p, mode="overwrite")
     else:
@@ -226,13 +230,27 @@ def load_manifest(spark: SparkSession, path: str) -> dict[str, dict]:
     return {r["column"]: r.asDict() for r in objstore.read_df(spark, path).collect()}
 
 
+def check_stats_manifest(spark: SparkSession, table_path: str, fmt: str = "parquet") -> list[str]:
+    """Integrity audit of the `.stats` manifest: every column's
+    row_count must equal the table's."""
+    try:
+        rows = spark.read.parquet(stats_path(table_path)).collect()
+        n = getattr(spark.read, fmt)(table_path).count()
+    except Exception:
+        return ["stats manifest missing or unreadable"]
+    return [
+        f"stats manifest {r['column']}: row_count {r['row_count']} != table {n}"
+        for r in rows if r["row_count"] != n
+    ]
+
+
 def manifest_from_sidecar(table_path: str) -> dict[str, dict] | None:
     """Full per-column stats from the `<table>.parquet.stats` sidecar,
     driver-side via pyarrow (no Spark job). None without a sidecar."""
     import glob as _glob
     import os
 
-    sidecar = table_path.rstrip("/") + ".stats"
+    sidecar = stats_path(table_path)
     if not os.path.isdir(sidecar):
         return None
     try:
@@ -287,7 +305,7 @@ def ndv_from_sidecar(table_path: str) -> dict[str, int] | None:
     import glob as _glob
     import os
 
-    sidecar = table_path.rstrip("/") + ".stats"
+    sidecar = stats_path(table_path)
     if not os.path.isdir(sidecar):
         return None
     try:
@@ -312,7 +330,7 @@ def row_count_from_sidecar(table_path: str) -> int | None:
     import glob as _glob
     import os
 
-    sidecar = table_path.rstrip("/") + ".stats"
+    sidecar = stats_path(table_path)
     if not os.path.isdir(sidecar):
         return None
     try:
@@ -861,6 +879,41 @@ def merge_value_index(spark: SparkSession, table_path: str, col: str, batch_df: 
     # merge runs AFTER the batch's table append, so the signature taken
     # now matches the table state the merged counts describe
     _write_table_sig(table_path, value_index_path(table_path, col))
+
+
+def check_value_index(
+    spark: SparkSession, table_path: str, col: str, fmt: str = "parquet"
+) -> list[str]:
+    """Integrity audit of the `.vidx/<col>` sidecar (the value<->count
+    lockstep the reference's SI checker enforces per block): its counts
+    must sum to the table's rows and match a live recount per value. The
+    recount runs over the index's key, read from its `_meta.json`: the
+    column, a composite index's key struct, or a JSON-field index's
+    `json_field_expr(parent, json_path)`."""
+    df = getattr(spark.read, fmt)(table_path)
+    jm = json_index_meta(table_path, col)
+    keys = [jm["parent"]] if jm else composite_index_cols(table_path, col)
+    if keys is None and col not in df.columns:
+        return [f"value index {col}: column absent from table"]
+    missing = [k for k in keys or () if k not in df.columns]
+    if missing:
+        return [f"value index {col}: key columns absent: {missing}"]
+    if jm:
+        df = df.withColumn(col, json_field_expr(jm["parent"], jm["json_path"]))
+    elif keys:
+        df = _with_composite_col(df, col, keys)
+    # check_fresh=False: the recount below subsumes the signature gate
+    idx = load_value_index(spark, table_path, col, check_fresh=False)
+    n = df.count()
+    total = idx.agg(F.sum("cnt")).first()[0] or 0
+    if total != n:
+        return [f"value index {col}: cnt sum {total} != table rows {n}"]
+    # value indexes are small by contract; a driver-side compare is
+    # NULL-safe (a NULL value row would silently miss an equi-join)
+    live = {r["value"]: r["cnt"] for r in build_value_index(df, col).collect()}
+    stored = {r["value"]: r["cnt"] for r in idx.collect()}
+    bad = sum(1 for k in set(live) | set(stored) if live.get(k) != stored.get(k))
+    return [f"value index {col}: {bad} values out of sync"] if bad else []
 
 
 # ------------------------------------------- JSON per-field indexes (A11

@@ -276,46 +276,6 @@ class Engine:
                 if df is not None:
                     df.createOrReplaceTempView(pname)
 
-    def _compact_companion(self, base: str, suffix: str) -> bool:
-        """Coalesce-rewrite a row-local companion sidecar (.textstats /
-        .dedupsig) fragmented by per-batch appends: content is
-        row-identical, so the meta and table-signature files carry over
-        unchanged. Rewrite-then-swap like every compaction here."""
-        import os
-        import shutil
-
-        from columnar_spark.writer import ROWS_PER_SPLIT
-
-        p = base.rstrip("/") + suffix
-        # crash recovery first: a previous compaction that died between
-        # its two renames leaves p missing with p.old intact (answers
-        # stayed correct — loaders fall back to the live path), plus
-        # orphan .old/.compact.tmp dirs no later run would sweep because
-        # the isdir(p) early-return below fires first
-        old, tmp = p + ".old", p + ".compact.tmp"
-        if not os.path.isdir(p) and os.path.isdir(old):
-            os.rename(old, p)
-        shutil.rmtree(tmp, ignore_errors=True)
-        if os.path.isdir(p):
-            shutil.rmtree(old, ignore_errors=True)
-        if not os.path.isdir(p):
-            return False
-        files = [f for f in os.listdir(p) if f.endswith(".parquet")]
-        df = self.spark.read.parquet(p)
-        n = df.count()
-        target = max(1, n // ROWS_PER_SPLIT + (1 if n % ROWS_PER_SPLIT else 0))
-        if len(files) <= max(target, 4):
-            return False
-        df.repartition(target).write.mode("overwrite").parquet(tmp)
-        for extra in ("_meta.json", "_table_sig.json"):
-            src = os.path.join(p, extra)
-            if os.path.isfile(src):
-                shutil.copy(src, os.path.join(tmp, extra))
-        os.rename(p, old)
-        os.rename(tmp, p)
-        shutil.rmtree(old)
-        return True
-
     def _try_agg_projection_route(self, query: str) -> "DataFrame | None":
         """Serve a covered filter+GROUP-BY+associative-measure query from
         a declared .aggproj sidecar (aggprojections.py). Matching is
@@ -1661,7 +1621,8 @@ class Engine:
                 )
                 for e in history(base)
             ]
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 rows or [(-1, "(none)", -1, 0.0, False)],
                 "version: long, op: string, n_rows_retired: long, "
                 "ts: double, retained: boolean",
@@ -1871,50 +1832,10 @@ class Engine:
             _re.IGNORECASE,
         )
         if m:
-            import os
-
             from columnar_spark.writer import compact_table
 
             name = m.group(1)
-            base = f"{self.sf_dir}/{name}.parquet"
-            before, after = compact_table(self.spark, base)
-            if os.path.isdir(base + ".ftidx"):
-                from columnar_spark.operators.fulltext import compact_text_index
-
-                compact_text_index(self.spark, base)
-            # Row-local companions fragment one file per append batch:
-            # coalesce-rewrite them in place (content identical, sig
-            # files carried over — the base table did not change here).
-            for suffix in (".textstats", ".dedupsig"):
-                self._compact_companion(base, suffix)
-            # A fragmented projection gets the full clustered rewrite
-            # (rebuild IS its compaction — re-clusters by the declared
-            # key and re-records both constituent signatures).
-            from columnar_spark.projections import (
-                projection_path as _ppath,
-                projections_on,
-                rebuild_projection,
-            )
-
-            for pname in projections_on(base):
-                pdir = _ppath(base, pname)
-                pfiles = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-                if len(pfiles) > max(4, after):
-                    rebuild_projection(self.spark, base, pname)
-            # Aggregate projections: the compaction rewrote the base
-            # table, so their source/enrich signatures are stale by
-            # construction — rebuild (cheap: O(groups) writes) so they
-            # keep serving instead of falling back forever.
-            from columnar_spark.aggprojections import (
-                agg_projections_on,
-                agg_projections_referencing,
-                rebuild_agg_projection,
-            )
-
-            for pname in agg_projections_on(base):
-                rebuild_agg_projection(self.spark, base, pname)
-            for fpath, pname in agg_projections_referencing(base):
-                rebuild_agg_projection(self.spark, fpath, pname)
+            before, after = compact_table(self.spark, f"{self.sf_dir}/{name}.parquet")
             self._invalidate_table_caches(name)
             return local_rows(
                 self.spark,
@@ -1925,7 +1846,7 @@ class Engine:
             r"^\s*SHOW\s+CREATE\s+TABLE\s+(\w+)\s*;?\s*$", query, _re.IGNORECASE
         )
         if m:
-            import os
+            from columnar_spark.sidecars import inventory
 
             name = m.group(1)
             df = self.table(name)
@@ -1933,45 +1854,7 @@ class Engine:
             cols = ",\n  ".join(
                 f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
             )
-            from columnar_spark.stats import (
-                composite_index_cols,
-                json_index_meta,
-                persisted_value_index_cols,
-            )
-
-            clauses = []
-            for c in persisted_value_index_cols(base):
-                jm = json_index_meta(base, c)
-                cm = composite_index_cols(base, c)
-                if jm:
-                    clauses.append(
-                        f"INDEX (get_json_object({jm['parent']}, '{jm['json_path']}'))"
-                    )
-                elif cm:
-                    clauses.append(f"INDEX ({', '.join(cm)})")
-                else:
-                    clauses.append(f"INDEX ({c})")
-            if os.path.isdir(base + ".ftidx"):
-                from columnar_spark.operators.fulltext import load_text_index
-
-                lt = load_text_index(self.spark, base)
-                if lt is not None:
-                    clauses.append(
-                        f"TEXT INDEX ({lt[2]['text_col']}, "
-                        f"{lt[2].get('id_col', 'doc_id')})"
-                    )
-            from columnar_spark.operators.knn_index import (
-                _load_vector_index_dir,
-                vector_index_dirs,
-            )
-
-            for vdir in vector_index_dirs(base):
-                vi = _load_vector_index_dir(base, vdir, check_fresh=False)
-                if vi is not None:
-                    clauses.append(
-                        f"VECTOR INDEX ({vi.vec_col}) "
-                        f"WITH (metric='{vi.metric}', nlist={vi.nlist}, m={vi.m})"
-                    )
+            clauses = [clause for *_, clause in inventory(base) if clause]
             tail = ("\n  , " + "\n  , ".join(clauses)) if clauses else ""
             ddl = f"CREATE TABLE {name} (\n  {cols}{tail}\n)"
             return local_rows(
@@ -1995,13 +1878,13 @@ class Engine:
                 except Exception:  # noqa: BLE001 — stats sidecar optional
                     n = None
                 rows.append((name, -1 if n is None else int(n)))
-            return self.spark.createDataFrame(
-                rows or [("(empty)", -1)], "table: string, row_count: long"
+            return local_rows(
+                self.spark, rows or [("(empty)", -1)], "table: string, row_count: long"
             )
 
-        # SHOW INDEXES FROM <table>: every sidecar artifact beside the
-        # table (value indexes, posting lists, text index, vector index,
-        # rollup, stats, retained versions) — the indextool-style
+        # SHOW INDEXES FROM <table>: one row per sidecar artifact beside
+        # the table (every sidecars.KINDS instance, the kind's name as
+        # its `kind`) plus the retained versions — the indextool-style
         # inventory as a result set. Metadata-only.
         m = _re.match(
             r"^\s*SHOW\s+INDEXES\s+FROM\s+(\w+)\s*;?\s*$", query, _re.IGNORECASE
@@ -2009,71 +1892,16 @@ class Engine:
         if m:
             import os
 
-            name = m.group(1)
-            base = f"{self.sf_dir}/{name}.parquet"
-            rows: list[tuple[str, str, str]] = []
-            from columnar_spark.stats import (
-                persisted_posting_index_cols,
-                persisted_value_index_cols,
-            )
+            from columnar_spark.sidecars import inventory
 
-            from columnar_spark.stats import json_index_meta
-
-            for c in persisted_value_index_cols(base):
-                jm = json_index_meta(base, c)
-                kind = "json_field_index" if jm else "value_index"
-                col = f"{jm['parent']}:{jm['json_path']}" if jm else c
-                rows.append((kind, col, f"{base}.vidx/{c}"))
-            for c in persisted_posting_index_cols(base):
-                rows.append(("posting_index", c, f"{base}.pidx/{c}"))
-            if os.path.isdir(f"{base}.ftidx"):
-                rows.append(("text_index", "—", f"{base}.ftidx"))
-            from columnar_spark.operators.hnsw_index import (
-                graph_index_dirs,
-                load_graph_index_meta,
-            )
-            from columnar_spark.operators.knn_index import (
-                _load_vector_index_dir,
-                vector_index_dirs,
-            )
-
-            for vdir in vector_index_dirs(base):
-                vi = _load_vector_index_dir(base, vdir, check_fresh=False)
-                rows.append(
-                    ("vector_index", vi.vec_col if vi else "—", vdir)
-                )
-            for gdir in graph_index_dirs(base):
-                gm = load_graph_index_meta(
-                    base, check_fresh=False, index_path=gdir
-                )
-                rows.append(
-                    ("vector_graph_index", gm["vec_col"] if gm else "—", gdir)
-                )
-            if os.path.isdir(f"{base}.rollup"):
-                rows.append(("rollup", "—", f"{base}.rollup"))
-            if os.path.isdir(f"{base}.vocab"):
-                rows.append(("vocab_monitor", "—", f"{base}.vocab"))
-            if os.path.isdir(f"{base}.textstats"):
-                rows.append(("textstats_companion", "—", f"{base}.textstats"))
-            if os.path.isdir(f"{base}.dedupsig"):
-                rows.append(("dedupsig_companion", "—", f"{base}.dedupsig"))
-            from columnar_spark.projections import projections_on
-
-            for pn in projections_on(base):
-                rows.append(("join_projection", pn, f"{base}.proj/{pn}"))
-            from columnar_spark.aggprojections import agg_projections_on
-
-            for pn in agg_projections_on(base):
-                rows.append(("aggregate_projection", pn, f"{base}.aggproj/{pn}"))
-            if os.path.isdir(f"{base}.cohort"):
-                rows.append(("cohort_matrix", "—", f"{base}.cohort"))
-            if os.path.isdir(f"{base}.stats"):
-                rows.append(("stats_manifest", "—", f"{base}.stats"))
+            base = f"{self.sf_dir}/{m.group(1)}.parquet"
+            rows = [(kind, col, art) for kind, col, art, _ in inventory(base)]
             vdir = f"{base}.versions"
             if os.path.isdir(vdir):
                 n_v = len([d for d in os.listdir(vdir) if d.startswith("v")])
                 rows.append(("versions", str(n_v), vdir))
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 rows or [("none", "—", "—")],
                 "kind: string, column: string, path: string",
             )
@@ -2088,8 +1916,10 @@ class Engine:
                 (c, d["min"], d["max"], d["ndv"], d["null_count"], d["row_count"])
                 for c, d in sorted(self.stats(name).items())
             ]
-            return self.spark.createDataFrame(
-                rows, "column: string, min: string, max: string, ndv: long, null_count: long, row_count: long"
+            return local_rows(
+                self.spark,
+                rows,
+                "column: string, min: string, max: string, ndv: long, null_count: long, row_count: long",
             )
 
         # Honor the engine-wide rewrite kill-switch for the PYTHON

@@ -143,6 +143,22 @@ def load_textstats(
     return objstore.read_df(spark, p)
 
 
+def check_textstats(spark: SparkSession, table_path: str, fmt: str = "parquet") -> list[str]:
+    """Integrity audit: the stored features must equal a live
+    re-projection (the same text_features code path), row for row."""
+    meta = textstats_meta(table_path)
+    side = load_textstats(spark, table_path, check_fresh=False)
+    if side is None:
+        return ["textstats sidecar: meta present but unreadable"]
+    df = getattr(spark.read, fmt)(table_path)
+    if meta["text_col"] not in df.columns or meta["id_col"] not in df.columns:
+        return []
+    live = text_features(df, meta["id_col"], meta["text_col"])
+    if side.exceptAll(live).limit(1).count() + live.exceptAll(side).limit(1).count():
+        return ["textstats sidecar: rows disagree with live recompute"]
+    return []
+
+
 def merge_textstats(spark: SparkSession, table_path: str, appended: DataFrame) -> None:
     """Incremental E9 maintenance: features are row-local, so one batch's
     contribution is simply the feature projection of the appended rows —

@@ -21,7 +21,8 @@ scan speed / skipping), not byte level:
 - string-hash companion: optional `<col>__hash` xxhash64 column
   (builderint.cpp:446-466 analog) for cheap equality joins / dedup keys;
 - structural checker (reference check.cpp:316) -> `check_table`:
-  validates sortedness invariants and stats-manifest consistency.
+  validates the write-time invariants, then every sidecar through its
+  registry kind's checker (sidecars.py).
 
 Scale posture: the writer is a pure DataFrame transform + one
 `repartitionByRange` shuffle; nothing driver-side. `target_file_rows`
@@ -38,7 +39,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from columnar_spark.stats import build_stats_manifest
+from columnar_spark.stats import build_stats_manifest, stats_path
 
 
 @dataclass
@@ -222,10 +223,6 @@ def drop_stale_sidecars(path: str) -> list[str]:
             shutil.rmtree(p)
             removed.append(p[len(base):])
     return removed
-
-
-def stats_path(table_path: str) -> str:
-    return table_path.rstrip("/") + ".stats"
 
 
 def write_bucketed(
@@ -756,167 +753,36 @@ def check_table(
 ) -> list[str]:
     """Structural integrity checker — CheckColumnarStorage analog
     (columnar/accessor/check.cpp:316-322). Returns a list of violations
-    (empty = clean): sorted-MVA invariant, hash-companion consistency,
-    stats-manifest row count agreement."""
+    (empty = clean): the table's own write-time invariants (sorted MVA
+    arrays, hash companions), then every sidecar's content through its
+    kind's `check` in sidecars.KINDS (stats manifest row counts, value
+    and JSON-field indexes, vector and graph indexes, text index,
+    textstats, dedupsig, join and aggregate projections, cohort)."""
+    from columnar_spark import sidecars
+    from columnar_spark.stats import rewrites_disabled
+
     spec = spec or WriteSpec()
     errors: list[str] = []
     df = getattr(spark.read, spec.format)(path)
-
     # The audit's counts and recounts must come from the BASE table —
     # with the Catalyst extension live, a COUNT(*) or a value recount
     # would be served from the very sidecar under audit (vacuous check).
-    from columnar_spark.stats import rewrites_disabled
-
     with rewrites_disabled(spark):
-        return _check_table_body(spark, path, spec, errors, df)
-
-
-def _check_table_body(
-    spark: SparkSession, path: str, spec: WriteSpec, errors: list[str], df: DataFrame
-) -> list[str]:
-    for c in spec.mva_cols:
-        bad = df.filter(
-            F.col(c).isNotNull() & (F.col(c) != F.array_sort(F.col(c)))
-        ).count()
-        if bad:
-            errors.append(f"mva column {c}: {bad} rows violate sorted invariant")
-    for c in spec.hash_cols:
-        h = f"{c}__hash"
-        if h not in df.columns:
-            errors.append(f"hash companion {h} missing")
-            continue
-        bad = df.filter(F.col(h) != F.xxhash64(F.col(c))).count()
-        if bad:
-            errors.append(f"hash companion {h}: {bad} rows inconsistent")
-
-    try:
-        manifest = spark.read.parquet(stats_path(path))
-        mrows = {r["column"]: r for r in manifest.collect()}
-        n = df.count()
-        for c, r in mrows.items():
-            if r["row_count"] != n:
-                errors.append(
-                    f"stats manifest {c}: row_count {r['row_count']} != table {n}"
-                )
-    except Exception:
-        errors.append("stats manifest missing or unreadable")
-
-    # Vector sidecar, when present: same one-call contract as the
-    # reference's checker walking every companion structure.
-    from columnar_spark.operators.knn_index import check_vector_index
-
-    errors.extend(check_vector_index(spark, path))
-    from columnar_spark.operators.hnsw_index import check_graph_index
-
-    errors.extend(check_graph_index(spark, path))
-
-    # Inverted-text sidecar, when present.
-    from columnar_spark.operators.fulltext import check_text_index
-
-    errors.extend(check_text_index(spark, path, fmt=spec.format))
-
-    # Value-index sidecars: each must tile the table exactly — count
-    # sums equal the table row count, and per-value counts match a
-    # recount (the same value<->count lockstep the reference's SI
-    # checker enforces per block).
-    from columnar_spark.stats import (
-        build_value_index,
-        load_value_index,
-        persisted_value_index_cols,
-    )
-
-    n = df.count()
-    from columnar_spark.stats import _with_composite_col, composite_index_cols
-
-    for c in persisted_value_index_cols(path):
-        # check_fresh=False: the checker validates sidecar CONTENT against
-        # a live recount below, which subsumes the signature gate.
-        idx = load_value_index(spark, path, c, check_fresh=False)
-        cmeta = composite_index_cols(path, c)
-        if cmeta is not None:
-            missing = [x for x in cmeta if x not in df.columns]
-            if missing:
-                errors.append(f"value index {c}: key columns absent: {missing}")
+        for c in spec.mva_cols:
+            bad = df.filter(
+                F.col(c).isNotNull() & (F.col(c) != F.array_sort(F.col(c)))
+            ).count()
+            if bad:
+                errors.append(f"mva column {c}: {bad} rows violate sorted invariant")
+        for c in spec.hash_cols:
+            h = f"{c}__hash"
+            if h not in df.columns:
+                errors.append(f"hash companion {h} missing")
                 continue
-            dfc = _with_composite_col(df, c, cmeta)
-        elif c not in df.columns:
-            errors.append(f"value index {c}: column absent from table")
-            continue
-        else:
-            dfc = df
-        total = idx.agg(F.sum("cnt")).first()[0] or 0
-        if total != n:
-            errors.append(f"value index {c}: cnt sum {total} != table rows {n}")
-            continue
-        # value indexes are small by contract; a driver-side compare is
-        # NULL-safe (a NULL value row would silently miss an equi-join)
-        live = {r["value"]: r["cnt"] for r in build_value_index(dfc, c).collect()}
-        stored = {r["value"]: r["cnt"] for r in idx.collect()}
-        mismatches = sum(
-            1
-            for k in set(live) | set(stored)
-            if live.get(k) != stored.get(k)
-        )
-        if mismatches:
-            errors.append(f"value index {c}: {mismatches} values out of sync")
-
-    # Text-feature companion, when present: the stored features must
-    # equal a live re-projection (same text_features code path).
-    from columnar_spark.textstats import load_textstats, text_features, textstats_meta
-
-    tsm = textstats_meta(path)
-    if tsm is not None:
-        side = load_textstats(spark, path, check_fresh=False)
-        if side is None:
-            errors.append("textstats sidecar: meta present but unreadable")
-        elif tsm["text_col"] in df.columns and tsm["id_col"] in df.columns:
-            live_feats = text_features(df, tsm["id_col"], tsm["text_col"])
-            bad = (
-                side.exceptAll(live_feats).limit(1).count()
-                + live_feats.exceptAll(side).limit(1).count()
-            )
+            bad = df.filter(F.col(h) != F.xxhash64(F.col(c))).count()
             if bad:
-                errors.append("textstats sidecar: rows disagree with live recompute")
-
-    # Near-dup signature companion, when present: stored sketches must
-    # equal a live recompute with the recorded parameters.
-    from columnar_spark.dedupsig import dedupsig_meta, load_dedupsig, signature_frame
-
-    dsm = dedupsig_meta(path)
-    if dsm is not None:
-        side = load_dedupsig(
-            spark, path, dsm["num_hashes"], dsm["shingle_k"], check_fresh=False
-        )
-        if side is None:
-            errors.append("dedupsig sidecar: meta present but unreadable")
-        elif dsm["text_col"] in df.columns and dsm["id_col"] in df.columns:
-            live_sigs = signature_frame(
-                df, dsm["id_col"], dsm["text_col"],
-                dsm["num_hashes"], dsm["shingle_k"],
-            )
-            bad = (
-                side.exceptAll(live_sigs).limit(1).count()
-                + live_sigs.exceptAll(side).limit(1).count()
-            )
-            if bad:
-                errors.append("dedupsig sidecar: rows disagree with live recompute")
-
-    # Join projections on this table (fact side), when present: stored
-    # rows must agree with a live recount of the join.
-    from columnar_spark.projections import check_projection, projections_on
-
-    for pname in projections_on(path):
-        errors.extend(check_projection(spark, path, pname))
-    # Aggregate projections (source side): merged partials must agree
-    # with a live recompute of the declared aggregation.
-    from columnar_spark.aggprojections import (
-        agg_projections_on,
-        check_agg_projection,
-    )
-
-    for pname in agg_projections_on(path):
-        errors.extend(check_agg_projection(spark, path, pname))
-    return errors
+                errors.append(f"hash companion {h}: {bad} rows inconsistent")
+    return errors + sidecars.check(spark, path, spec.format)
 
 
 # ----------------------------------------------------------- maintenance
@@ -941,11 +807,17 @@ def compact_table(
     new complete layout, never a half-written one (the object-store
     pattern; local rename is atomic enough for tests).
 
-    Returns (files_before, files_after). No-op (and no rewrite) when
-    the table is already at or below the target file count.
+    Then every sidecar is compacted through its kind's `compact` in
+    sidecars.KINDS (text-index delta folding, companion and vector-code
+    coalescing, projection rebuilds), whether or not the table itself
+    was rewritten: OPTIMIZE is this call.
+
+    Returns (files_before, files_after). The table is not rewritten
+    when it is already at or below the target file count.
     """
-    import os
-    import shutil
+    from columnar_spark import sidecars
+    from columnar_spark.snapshots import swap_with_history
+    from columnar_spark.stats import table_signature
 
     spec = spec or WriteSpec()
     df = getattr(spark.read, spec.format)(path)
@@ -954,76 +826,41 @@ def compact_table(
     )
     n_rows = df.count()
     target_files = max(1, n_rows // rows_per_split + (1 if n_rows % rows_per_split else 0))
-    if files_before <= target_files:
-        return files_before, files_before
-
-    tmp = path.rstrip("/") + ".compact.tmp"
-    compact_spec = WriteSpec(**{**spec.__dict__, "num_partitions": target_files})
-    if not compact_spec.cluster_by:
-        df = df.repartition(target_files)
-    write_table(df, tmp, compact_spec)
-
-    from columnar_spark.snapshots import swap_with_history
-
-    swap_with_history(
-        path,
-        tmp,
-        op="compact",
-        fmt=spec.format,
-        n_rows_before=n_rows,
-        stats_sidecar=stats_path(path),
-        tmp_stats=stats_path(tmp),
-    )
-    files_after = len(
-        [f for f in os.listdir(path) if f.endswith((".parquet", ".orc"))]
-    )
-    compact_vector_index(spark, path)
-    # Compaction changes the table dir's file signature without changing
-    # its CONTENTS, so every sidecar stays exact — but the freshness
-    # gates compare signatures, and a stale recorded one would refuse
-    # the artifact forever. Re-record, don't rebuild.
-    from columnar_spark.sidecars import restamp
-
-    restamp(path)
+    files_after = files_before
+    if files_before > target_files:
+        tmp = path.rstrip("/") + ".compact.tmp"
+        compact_spec = WriteSpec(**{**spec.__dict__, "num_partitions": target_files})
+        if not compact_spec.cluster_by:
+            df = df.repartition(target_files)
+        write_table(df, tmp, compact_spec)
+        pre_sig = table_signature(path)
+        swap_with_history(
+            path,
+            tmp,
+            op="compact",
+            fmt=spec.format,
+            n_rows_before=n_rows,
+            stats_sidecar=stats_path(path),
+            tmp_stats=stats_path(tmp),
+        )
+        files_after = len(
+            [f for f in os.listdir(path) if f.endswith((".parquet", ".orc"))]
+        )
+        # The rewrite changes the table dir's file signature without
+        # changing its CONTENTS, so every sidecar that matched the table
+        # before stays exact — but the freshness gates compare
+        # signatures, and a stale recorded one would refuse the artifact
+        # forever. Re-record, don't rebuild; an artifact already stale
+        # before the rewrite stays stale.
+        sidecars.restamp(path, pre_sig)
+    sidecars.compact(spark, path, spec.format)
     return files_before, files_after
 
 
 def compact_vector_index(spark: SparkSession, path: str) -> bool:
-    """Compact the vector sidecar's code dataset: per-batch appends
-    leave one file per (batch, cluster); rewrite to one file per cluster
-    partition, same rewrite-then-swap pattern. Codes are NOT retrained —
-    ids, clusters, and pq codes are byte-identical, only the file layout
-    changes. Returns True when a rewrite happened."""
-    import glob
-    import os
-    import shutil
+    """Compact the code dataset of every vector artifact on the table
+    (knn_index.compact_vector_index_dir). Returns True when a rewrite
+    happened."""
+    from columnar_spark.operators.knn_index import compact_vector_index_dir, vector_index_dirs
 
-    from columnar_spark.operators.knn_index import (
-        _load_vector_index_dir,
-        vector_index_dirs,
-    )
-
-    did = False
-    for d in vector_index_dirs(path):
-        # compaction just changed the table's file signature — read anyway
-        index = _load_vector_index_dir(path, d, check_fresh=False)
-        if index is None:
-            continue
-        vp = index.vectors_path
-        n_files = len(glob.glob(os.path.join(vp, "ivf_cluster=*", "*.parquet")))
-        if n_files <= index.nlist:
-            continue
-        codes = spark.read.parquet(vp)
-        tmp = vp.rstrip("/") + ".compact.tmp"
-        (
-            codes.repartition("ivf_cluster")
-            .write.mode("overwrite")
-            .partitionBy("ivf_cluster")
-            .parquet(tmp)
-        )
-        old = vp.rstrip("/") + ".compact.old"
-        shutil.move(vp, old)
-        shutil.move(tmp, vp)
-        shutil.rmtree(old)
-        did = True
-    return did
+    return any([compact_vector_index_dir(spark, path, d) for d in vector_index_dirs(path)])

@@ -8,7 +8,13 @@ recovery, DML and DROP maintain every sidecar kind through one list.
 - a table carrying every registry kind: after INSERT, DELETE, UPDATE
   (on it and on its projections' dim table) and OPTIMIZE each kind's
   artifact equals a from-scratch build over the current table, or is
-  absent;
+  absent, and check_table finds nothing; a corrupted artifact of every
+  kind with a checker is reported;
+- SHOW INDEXES lists one row per artifact of every kind, in no Spark
+  job; SHOW CREATE TABLE reads the text index's meta only;
+- compaction (OPTIMIZE and writer.compact_table alike) compacts the
+  text index and the row-local companions, and re-stamps only the
+  artifacts that matched the table before the rewrite;
 - every sibling directory a public writer creates is claimed by a
   registry kind, and a write_table overwrite removes them all;
 - DROP TABLE of a table registered as a view drops the view."""
@@ -22,7 +28,7 @@ from pyspark.sql import functions as F
 
 from columnar_spark import sidecars
 from columnar_spark.table import Engine
-from columnar_spark.writer import write_table
+from columnar_spark.writer import check_table, compact_table, write_table
 
 
 def _rows(df, cols=None):
@@ -383,8 +389,8 @@ CHECKS = {
     "dedupsig": _check_dedupsig,
     "join_projection": _check_join,
     "join_projection_dim": lambda spark, _p, inst: _check_join(spark, *inst),
-    "agg_projection": _check_agg,
-    "agg_projection_enrich": lambda spark, _p, inst: _check_agg(spark, *inst),
+    "aggregate_projection": _check_agg,
+    "aggregate_projection_enrich": lambda spark, _p, inst: _check_agg(spark, *inst),
     "cohort": _check_cohort,
     "rollup": _check_rollup,
 }
@@ -433,10 +439,12 @@ def test_every_kind_matches_a_rebuild_after_each_write(spark, tmp_path):
         # turns stale
         (["OPTIMIZE docs"], every - {"json_field_index"}),
     ]
+    assert check_table(spark, docs) == []
     for queries, want in steps:
         for query in queries:
             eng.sql(query)
         assert _served_kinds(spark, docs, users) == want, queries
+        assert check_table(spark, docs) == [], queries
 
 
 def test_every_sibling_is_claimed_and_an_overwrite_drops_them(spark, tmp_path):
@@ -476,3 +484,144 @@ def test_crashed_ledger_rebuilds_all_but_retry_exact_kinds(spark, tmp_path, monk
         (("fold" if k.retry_exact or not crashed else "rebuild"), k.name) for k in kinds
     }
     assert set(calls) == want and len(calls) == len(kinds)
+
+
+# ------------------------------------------------ check, SHOW, OPTIMIZE
+
+def _corrupt(art):
+    """Damage one artifact in place: in its first non-empty data file,
+    bump the first `row_count` / `cnt` value, or else drop the first
+    row."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = sorted(
+        f for f in glob.glob(f"{art}/**/*.parquet", recursive=True) if os.path.isfile(f)
+    )
+    f, t = next((f, t) for f in files if (t := pq.read_table(f, coerce_int96_timestamp_unit="us")).num_rows)
+    col = next((c for c in ("row_count", "cnt") if c in t.column_names), None)
+    if col is None:
+        t = t.slice(1)
+    else:
+        vals = t[col].to_pylist()
+        vals[0] += 1
+        t = t.set_column(t.column_names.index(col), col, pa.array(vals, t[col].type))
+    # INT96 timestamps, as Spark writes them
+    pq.write_table(t, f, use_deprecated_int96_timestamps=True)
+    # the Hadoop checksum of the old bytes would fail the read instead
+    crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+# the violation each kind's checker reports for its corrupted artifact
+_CORRUPTION_REPORTS = {
+    "stats": "stats manifest",
+    "value_index": "value index cat:",
+    "json_field_index": "value index props__j_k:",
+    "vector_index": "centroids:",
+    "graph_index": "part ",
+    "text_index": "text index:",
+    "textstats": "textstats sidecar:",
+    "dedupsig": "dedupsig sidecar:",
+    "join_projection": "projection docusers:",
+    "aggregate_projection": "agg projection bycat:",
+    "cohort": "cohort sidecar:",
+}
+
+
+def test_check_table_reports_a_corrupted_artifact_of_every_checked_kind(spark, tmp_path):
+    docs, _users = _build_every_kind(spark, tmp_path)
+    checked = [k for k in sidecars.KINDS if k.check is not None]
+    assert {k.name for k in checked} == set(_CORRUPTION_REPORTS)
+    for kind in checked:
+        _corrupt(kind.artifact(docs, kind.instances(docs)[0]))
+    errors = check_table(spark, docs)
+    for name, report in _CORRUPTION_REPORTS.items():
+        assert any(e.startswith(report) for e in errors), (name, errors)
+
+
+def test_show_indexes_lists_every_artifact_in_no_spark_job(spark, tmp_path, spark_cost, monkeypatch):
+    from columnar_spark.operators import fulltext
+
+    docs, _users = _build_every_kind(spark, tmp_path)
+    eng = Engine(spark, str(tmp_path))
+    rows, jobs, ticks = spark_cost(lambda: eng.sql("SHOW INDEXES FROM docs").collect())
+    assert (jobs, ticks) == (0, 0)
+    assert sorted((r["kind"], r["column"]) for r in rows) == sorted([
+        ("stats", "—"), ("value_index", "cat"), ("value_index", "cat__x__user_id"),
+        ("json_field_index", "props:$.k"), ("posting_index", "cat"),
+        ("vector_index", "emb"), ("graph_index", "emb"), ("text_index", "—"),
+        ("vocab", "—"), ("textstats", "—"), ("dedupsig", "—"),
+        ("join_projection", "docusers"), ("aggregate_projection", "bycat"),
+        ("cohort", "—"), ("rollup", "—"), ("rollup", "all"),
+    ])
+    assert {r["kind"] for r in rows} == {k.name for k in sidecars.KINDS if k.suffix}
+    assert all(os.path.isdir(r["path"]) for r in rows)
+    assert f"{docs}.rollup-all" in {r["path"] for r in rows}
+
+    # SHOW CREATE TABLE reads the text index's meta.json, not its frames
+    calls = []
+    load = fulltext.load_text_index
+    monkeypatch.setattr(
+        fulltext, "load_text_index", lambda *a, **k: calls.append(a) or load(*a, **k)
+    )
+    ddl = eng.sql("SHOW CREATE TABLE docs").first().create_table
+    assert calls == []
+    for clause in ("INDEX (cat)", "INDEX (cat, user_id)",
+                   "INDEX (get_json_object(props, '$.k'))", "TEXT INDEX (text, doc_id)",
+                   "VECTOR INDEX (emb) WITH (metric='l2', nlist=2, m=2)"):
+        assert clause in ddl, (clause, ddl)
+
+
+def test_compact_table_compacts_text_index_and_companions(spark, tmp_path):
+    from columnar_spark.dedupsig import dedupsig_path, write_dedupsig_sidecar
+    from columnar_spark.operators.fulltext import text_index_meta, write_text_index
+    from columnar_spark.textstats import load_textstats, textstats_path, write_textstats_sidecar
+
+    eng, p = _small_table(spark, tmp_path, "frag")
+    write_text_index(spark, p, "text", "doc_id")
+    write_textstats_sidecar(spark, p, "doc_id", "text")
+    write_dedupsig_sidecar(spark, p, "doc_id", "text", num_hashes=8)
+    for i in range(7, 12):
+        eng.sql(f"INSERT INTO frag VALUES ({i}, 'appended doc {i}')")
+
+    def n_files(d):
+        return len([f for f in os.listdir(d) if f.endswith(".parquet")])
+
+    assert n_files(textstats_path(p)) > 4 and n_files(dedupsig_path(p)) > 4
+    assert len(text_index_meta(p)["deltas"]) == 5
+    compact_table(spark, p)
+    assert n_files(textstats_path(p)) == 1 and n_files(dedupsig_path(p)) == 1
+    assert not text_index_meta(p).get("deltas")
+    assert load_textstats(spark, p) is not None
+    assert check_table(spark, p) == []
+
+
+def test_compaction_restamps_only_artifacts_fresh_before_it(spark, tmp_path):
+    from columnar_spark.stats import index_is_fresh, value_index_path, write_value_index
+
+    p = f"{tmp_path}/restamp_t.parquet"
+
+    def rows():
+        return spark.range(30).select(
+            F.col("id").alias("i"), (F.col("id") % 3).cast("string").alias("c")
+        )
+
+    rows().write.parquet(p)
+    write_value_index(spark, p, "c")
+    # out-of-band appends: the `c` index turns stale, `i` is built after
+    for _ in range(6):
+        rows().coalesce(1).write.mode("append").parquet(p)
+    write_value_index(spark, p, "i")
+    assert not index_is_fresh(p, value_index_path(p, "c"))
+    eng = Engine(spark, str(tmp_path))
+    row = eng.sql("OPTIMIZE TABLE restamp_t").first()
+    assert row.files_after < row.files_before
+    assert not index_is_fresh(p, value_index_path(p, "c"))
+    assert index_is_fresh(p, value_index_path(p, "i"))
+    assert eng.sql("SELECT COUNT(*) AS n FROM restamp_t WHERE c = '1'").first()["n"] == 70
+    assert spark.read.parquet(p).filter("c = '1'").count() == 70
+    assert eng.sql("SELECT COUNT(*) AS n FROM restamp_t WHERE i = 4").first()["n"] == 7
